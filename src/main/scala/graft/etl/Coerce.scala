@@ -29,8 +29,11 @@ import graft.model.EventSchema
 object Coerce {
 
   /** Main output + dead-letter side output. Call `unpersist()` when both
-    * outputs have been consumed. */
-  final case class CoerceResult(main: DataFrame, misfits: DataFrame, intermediate: DataFrame) {
+    * outputs have been consumed. `misfitsPossible` is false when no target
+    * column's type differs from the batch's: no cell can fail its cast, so
+    * `misfits` is empty by construction and callers may skip it. */
+  final case class CoerceResult(main: DataFrame, misfits: DataFrame, intermediate: DataFrame,
+      misfitsPossible: Boolean) {
     def unpersist(): Unit = { intermediate.unpersist(); () }
   }
 
@@ -138,8 +141,10 @@ object Coerce {
       if (misfitStructs.isEmpty) df.withColumn(MisfitArrCol, array().cast(ArrayType(EventSchema.MisfitSchema)))
       else df.withColumn(MisfitArrCol, filter(array(misfitStructs: _*), x => x.isNotNull))
 
+    // with no misfit struct the main output is the only consumer: nothing
+    // to share, so nothing to persist
     val inter =
-      if (persistIntermediate) withArr.persist(StorageLevel.MEMORY_AND_DISK)
+      if (persistIntermediate && misfitStructs.nonEmpty) withArr.persist(StorageLevel.MEMORY_AND_DISK)
       else withArr
 
     val mainClean = inter.select(casted: _*)
@@ -147,6 +152,6 @@ object Coerce {
       .select(explode(col(MisfitArrCol)).as("m"))
       .select(col("m.*"))
 
-    CoerceResult(mainClean, misfits, inter)
+    CoerceResult(mainClean, misfits, inter, misfitsPossible = misfitStructs.nonEmpty)
   }
 }

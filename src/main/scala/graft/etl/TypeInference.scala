@@ -1,8 +1,10 @@
 package graft.etl
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+
+import graft.model.EventSchema
 
 /** Batch type inference mirroring the reference's first-non-null rule
   * (seghouse/util/dataframe_util.py:11-51): each column's type is decided by
@@ -29,7 +31,8 @@ import org.apache.spark.sql.types._
   * in file order", a documented deterministic stand-in.
   *
   * Cost: ONE aggregate over the batch (map-side combinable, no shuffle of
-  * the data itself).
+  * the data itself). The load job folds this aggregate into its per-batch
+  * [[BatchProfile]], so every table of a batch is typed by the same job.
   */
 object TypeInference {
 
@@ -47,34 +50,46 @@ object TypeInference {
       else StringType
   }
 
-  /** The batch schema with string columns upgraded per the first-non-null
-    * rule. Non-string columns keep Spark's (already stricter) inference. */
-  def refineSchema(df: DataFrame, excludeCols: Set[String] = Set.empty): StructType = {
-    val stringCols = df.schema.fields
+  /** The string columns whose first value decides their DDL type. */
+  private[etl] def inferableColumns(schema: StructType, excludeCols: Set[String]): Seq[String] =
+    schema.fields.toIndexedSeq
       .filter(f => f.dataType == StringType && !excludeCols(f.name))
       .map(_.name)
-    if (stringCols.isEmpty) return df.schema
-    // deterministic "first": min over (stable key, value) structs — min
-    // skips nulls, so only rows where the column is non-null participate
-    val stableKey: Option[org.apache.spark.sql.Column] =
-      if (df.columns.contains("message_id")) Some(col("message_id")) else None
-    val aggs = stringCols.map { c =>
-      val picked = stableKey match {
-        case Some(k) => min(when(col(c).isNotNull, struct(k.as("k"), col(c).as("v"))))
-        case None    => min(when(col(c).isNotNull, struct(col(c).as("v"))))
-      }
-      picked.as(c)
-    }.toIndexedSeq
-    val row = df.agg(aggs.head, aggs.tail: _*).head()
-    val sniffed: Map[String, DataType] = stringCols.zipWithIndex.map { case (c, i) =>
-      c -> (if (row.isNullAt(i)) StringType
-            else sniff(row.getStruct(i).getAs[String]("v")))
-    }.toMap
-    StructType(df.schema.fields.map { f =>
-      sniffed.get(f.name) match {
-        case Some(dt) if dt != StringType => StructField(f.name, dt, nullable = true)
-        case _                            => f
-      }
+
+  /** The aggregate picking column `c`'s deterministic "first" value: min
+    * over (stable key, value) structs, or over the bare value when the frame
+    * has no `message_id`. min skips nulls, so only rows where the column is
+    * non-null participate. Read the result back with [[firstValue]]. */
+  private[etl] def firstValueAgg(c: String, hasStableKey: Boolean): Column = {
+    val picked =
+      if (hasStableKey) struct(col(EventSchema.MessageId).as("k"), col(c).as("v"))
+      else struct(col(c).as("v"))
+    min(when(col(c).isNotNull, picked))
+  }
+
+  private[etl] def firstValue(row: Row, i: Int): Option[String] =
+    if (row.isNullAt(i)) None else Option(row.getStruct(i).getAs[String]("v"))
+
+  /** `schema` with each column that has a first value upgraded per the type
+    * that value sniffs as. Driver-side: the first values come from an
+    * aggregate that already ran, over the inferable columns only. */
+  private[etl] def refine(schema: StructType, first: String => Option[String]): StructType =
+    StructType(schema.fields.map { f =>
+      first(f.name).map(sniff).filter(_ != StringType)
+        .fold(f)(dt => StructField(f.name, dt, nullable = true))
     })
+
+  /** The batch schema with string columns upgraded per the first-non-null
+    * rule. Non-string columns keep Spark's (already stricter) inference.
+    * This is the ungrouped case of the aggregate [[BatchProfile]] runs per
+    * table group. */
+  def refineSchema(df: DataFrame, excludeCols: Set[String] = Set.empty): StructType = {
+    val stringCols = inferableColumns(df.schema, excludeCols)
+    if (stringCols.isEmpty) return df.schema
+    val stable = df.columns.contains(EventSchema.MessageId)
+    val aggs = stringCols.map(c => firstValueAgg(c, stable).as(c))
+    val row = df.agg(aggs.head, aggs.tail: _*).head()
+    val firsts = stringCols.zipWithIndex.flatMap { case (c, i) => firstValue(row, i).map(c -> _) }.toMap
+    refine(df.schema, firsts.get)
   }
 }

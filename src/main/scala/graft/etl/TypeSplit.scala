@@ -10,10 +10,11 @@ import graft.model.EventSchema
   * Reference: seghouse/jobs/send_to_warehouse.py:357-368 — six equality
   * predicates on `type`; rows with any other type are silently dropped.
   *
-  * Scale note: each stream is a filter over the SAME parsed batch; callers
-  * that consume several streams should `persist()` the parsed input first
-  * (done in jobs.SendToWarehouseJob) so the source is read once, not six
-  * times. The filters themselves are narrow and pushdown-eligible.
+  * Scale note: each stream is a lazy filter over the SAME parsed batch, and
+  * none of them is scanned to decide anything: the load job persists the
+  * batch and takes row counts, all-null columns and the event-name list
+  * from one [[BatchProfile]] aggregate. Each stream is read once, by its
+  * table's write. The filters themselves are narrow and pushdown-eligible.
   */
 object TypeSplit {
 
@@ -23,15 +24,8 @@ object TypeSplit {
       t -> df.filter(col(EventSchema.TypeCol) === lit(t))
     }.toMap
 
-  /** O-13: one stream per distinct track event name. The distinct-name list
-    * is bounded by design (it drives table fan-out), so a driver-side
-    * collect is acceptable here — mirroring the reference's
-    * `sorted(tracks.event.unique())` (send_to_warehouse.py:215). */
-  def distinctEventNames(tracks: DataFrame): Seq[String] =
-    tracks.select(EventSchema.EventCol).distinct()
-      .orderBy(EventSchema.EventCol)
-      .collect().map(_.getString(0)).toSeq
-
+  /** O-13: the stream of one normalized track event name (the names come
+    * from `BatchProfile.eventNames`). */
   def filterEvent(tracks: DataFrame, eventName: String): DataFrame =
     tracks.filter(col(EventSchema.EventCol) === lit(eventName))
 }

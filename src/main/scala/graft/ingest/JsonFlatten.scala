@@ -92,7 +92,16 @@ object JsonFlatten {
   /** One pass computing max(size(arr)) for every array path in the schema.
     * Arrays nested under other arrays are sized via transform+max so the
     * whole observation stays a single map-side-combinable aggregate. */
-  def observeArrayLengths(df: DataFrame): Map[String, Int] = {
+  def observeArrayLengths(df: DataFrame): Map[String, Int] =
+    observe(df).fold(Map.empty[String, Int])(_.arrayLens)
+
+  /** What the array-length pass saw: its row count and the lengths. */
+  final case class Observation(rows: Long, arrayLens: Map[String, Int])
+
+  /** [[observeArrayLengths]] plus the number of rows the same pass saw, so
+    * a caller can stop on an empty input without a second scan. None when
+    * the schema has no array, and so no pass runs. */
+  def observe(df: DataFrame): Option[Observation] = {
     def arrayPaths(dt: DataType, path: Seq[String], c: Column): Seq[(String, Column)] = dt match {
       case st: StructType =>
         st.fields.toSeq.flatMap(f => arrayPaths(f.dataType, path :+ f.name, c.getField(f.name)))
@@ -120,13 +129,13 @@ object JsonFlatten {
       }
 
     val paths = df.schema.fields.toSeq.flatMap(f => arrayPaths(f.dataType, Seq(f.name), col(f.name)))
-    if (paths.isEmpty) Map.empty
+    if (paths.isEmpty) None
     else {
       val aggs = paths.map { case (p, c) => max(c).as(p) }
-      val row  = df.agg(aggs.head, aggs.tail: _*).head()
-      paths.zipWithIndex.map { case ((p, _), i) =>
-        p -> (if (row.isNullAt(i)) 0 else row.getInt(i))
-      }.toMap
+      val row  = df.agg(count(lit(1)), aggs: _*).head()
+      Some(Observation(row.getLong(0), paths.zipWithIndex.map { case ((p, _), i) =>
+        p -> (if (row.isNullAt(i + 1)) 0 else row.getInt(i + 1))
+      }.toMap))
     }
   }
 }

@@ -29,11 +29,6 @@ object Readers {
   def parquet(spark: SparkSession, path: String): DataFrame =
     spark.read.parquet(path)
 
-  /** Streaming NDJSON directory source — the Structured Streaming variant of
-    * the reference's batch file loop. Requires an explicit schema. */
-  def ndjsonStream(spark: SparkSession, dir: String, schema: StructType): DataFrame =
-    spark.readStream.schema(schema).json(dir)
-
   /** One of the driver-generated testdata tables. */
   def table(spark: SparkSession, sfDir: String, name: String): DataFrame =
     spark.read.parquet(s"$sfDir/$name.parquet")

@@ -1,10 +1,9 @@
 package graft.jobs
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
-import graft.etl.{Normalize, TypeSplit}
+import graft.etl.{BatchProfile, ColumnStats, Normalize, TypeSplit}
 import graft.ingest.{JsonFlatten, Readers}
 import graft.model.EventSchema._
 import graft.sink.{TableCatalog, WarehouseSink}
@@ -30,9 +29,12 @@ final case class JobConf(
   * per-file sequential parse -> flatten -> drop -> 6-way split -> extra
   * timestamps -> per-table store. Here the WHOLE input directory is one
   * distributed read (file-splitting replaces the reference's <100-file
-  * sequential loop), the parsed+flattened batch is persisted once and all
-  * six type-filters read from it, and each table write is one partitioned
-  * distributed job.
+  * sequential loop), and the parsed+flattened batch is persisted once. One
+  * grouped aggregate over it ([[graft.etl.BatchProfile]]) then decides the
+  * whole fan-out on the driver: which tables have rows, which columns are
+  * all-null, each table's refined DDL schema and the event-name list. After
+  * that, each stored table costs only its sink's work: the coerce/misfit
+  * pass where a column's type changes, and one partitioned write.
   *
   * Quirks preserved (semantics ledger, SURVEY §7.3): groups and aliases are
   * structure-checked against their own table names but INSERTED INTO
@@ -45,6 +47,8 @@ final class SendToWarehouseJob(
     conf: JobConf,
     namespace: String
 ) {
+  import SendToWarehouseJob.InferenceExcluded
+
   val schema: String = Names.decamelize(namespace)
 
   private val sinks: Seq[graft.sink.Warehouse] =
@@ -59,91 +63,90 @@ final class SendToWarehouseJob(
   }
 
   /** The batch core, reused verbatim by the streaming variant's
-    * foreachBatch. */
+    * foreachBatch. An empty batch stores nothing. */
   def processBatch(raw: DataFrame): Unit = {
-    sinks.foreach(_.createDatabase(schema))
-
-    val flat = normalize(raw)
-    // the one real physical-plan decision (SURVEY §4): persist the parsed
-    // batch so the six type filters + per-event fan-out scan it once
+    val input = raw.drop("_corrupt_record")
+    // the array-length observation is the first pass over the source and
+    // counts its rows: an empty batch stops there
+    val observed = JsonFlatten.observe(input)
+    if (observed.exists(_.rows == 0L)) return
+    val lens = observed.fold(Map.empty[String, Int])(_.arrayLens)
+    val flat = normalizeFlat(input.select(JsonFlatten.flattenColumns(input.schema, lens): _*))
+    // the one physical-plan decision (SURVEY §4): persist the parsed batch
+    // so the profile and every table write scan it once
     flat.persist(StorageLevel.MEMORY_AND_DISK)
     try {
+      val profile = BatchProfile(flat, InferenceExcluded)
+      if (profile.rows == 0L) return
+      sinks.foreach(_.createDatabase(schema))
       val byType = TypeSplit.breakDownByType(flat)
 
-      val identities = byType("identify")
-      store(IdentitiesTable, identities)
-      storeUsers(identities)
-      storeTracks(byType("track"))
-      store(ScreensTable, byType("screen"))
-      store(PagesTable, byType("page"))
+      profile.ofType("identify").foreach { stats =>
+        val identities = byType("identify")
+        store(IdentitiesTable, identities, stats)
+        if (stats.nonNull.getOrElse(UserId, 0L) > 0L)
+          sinks.foreach(_.upsertUsers(spark, schema, identities))
+      }
+      profile.ofType("track").foreach(storeTracks(byType("track"), _, profile))
+      profile.ofType("screen").foreach(store(ScreensTable, byType("screen"), _))
+      profile.ofType("page").foreach(store(PagesTable, byType("page"), _))
       // O-35 quirk: the reference ensures the groups/aliases TABLES' own
       // structure (DDL side effect, send_to_warehouse.py:273-296) and then
       // inserts the rows into identities — so the warehouse ends up with
       // (possibly empty) groups/aliases tables evolved to the batch schema,
       // AND the rows in identities.
-      store(IdentitiesTable, byType("group"), structureTable = Some(GroupsTable))
-      store(IdentitiesTable, byType("alias"), structureTable = Some(AliasesTable))
+      profile.ofType("group").foreach(
+        store(IdentitiesTable, byType("group"), _, structureTable = Some(GroupsTable)))
+      profile.ofType("alias").foreach(
+        store(IdentitiesTable, byType("alias"), _, structureTable = Some(AliasesTable)))
     } finally { flat.unpersist(); () }
   }
 
   /** Parse/flatten/normalize one raw NDJSON batch into the flat event frame:
     * O-4/O-5 flatten+decamelize, O-6 skip-fields, O-8 timestamp parse,
     * O-10 extra timezones, O-11 epoch millis. */
-  def normalize(raw: DataFrame): DataFrame = {
-    val flat       = JsonFlatten.flatten(raw.drop("_corrupt_record"))
+  def normalize(raw: DataFrame): DataFrame =
+    normalizeFlat(JsonFlatten.flatten(raw.drop("_corrupt_record")))
+
+  private def normalizeFlat(flat: DataFrame): DataFrame = {
     val dropped    = Normalize.dropSkipFields(flat, conf.skipFields)
     val parsed     = Normalize.parseTimestamps(dropped)
     val withExtra  = Normalize.extraTimestamps(parsed, conf.extraTimestamps)
     Normalize.withUnixMillis(withExtra)
   }
 
-  private def store(table: String, df: DataFrame,
+  /** Stores one non-empty table. §1.2: columns entirely null in this table
+    * do not take part in its DDL; the reference's first-non-null inference
+    * (dataframe_util.py:43-51) types the new columns, then the authoritative
+    * table schema wins at insert time and non-conforming cells become
+    * misfits (O-19). Both come from the batch profile, not from a scan. */
+  private def store(table: String, df: DataFrame, stats: ColumnStats,
       structureTable: Option[String] = None): Unit = {
-    if (df.isEmpty) return
-    val pruned = dropAllNullColumns(df)
-    // reference first-non-null type inference (dataframe_util.py:43-51):
-    // string columns whose first value is numeric/boolean define the DDL
-    // type for new columns; the authoritative table schema then wins at
-    // insert time and non-conforming cells become misfits (O-19)
-    val refined = graft.etl.TypeInference.refineSchema(pruned,
-      excludeCols = Set(MessageId, "anonymous_id", UserId, "ip", "channel",
-        "write_key", TypeCol, EventCol, OriginalEventCol))
+    val pruned  = df.drop(stats.deadColumns(df.schema): _*)
+    val refined = stats.refinedSchema(pruned.schema)
     // O-35: DDL side effect on the batch's own table (groups/aliases)
     structureTable.foreach(st => sinks.foreach(_.ensureStructure(schema, st, refined)))
     sinks.foreach(_.insertDf(spark, schema, table, pruned, ddlSchema = Some(refined)))
   }
 
-  private def storeUsers(identities: DataFrame): Unit = {
-    if (identities.isEmpty) return
-    sinks.foreach(_.upsertUsers(spark, schema, identities))
-  }
-
-  private def storeTracks(tracksRaw: DataFrame): Unit = {
-    if (tracksRaw.isEmpty) return
-    if (!tracksRaw.columns.contains(EventCol)) { store(TracksTable, tracksRaw); return }
+  private def storeTracks(tracksRaw: DataFrame, stats: ColumnStats, profile: BatchProfile): Unit = {
+    if (!tracksRaw.columns.contains(EventCol)) { store(TracksTable, tracksRaw, stats); return }
     val tracks = Normalize.normalizeEventName(tracksRaw)
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    try {
-      // shared tracks table takes the allowlist+prefix projection (O-7)
-      store(TracksTable,
-        Normalize.selectTracksColumns(tracks, conf.extraTimestamps.keys.toSeq))
-      // O-33: per-event-name fan-out; reserved-name collision -> esc_ prefix
-      TypeSplit.distinctEventNames(tracks).foreach { e =>
-        val tableName = if (DefaultTables.contains(e)) s"esc_$e" else e
-        store(tableName, TypeSplit.filterEvent(tracks, e))
-      }
-    } finally { tracks.unpersist(); () }
+    // shared tracks table takes the allowlist+prefix projection (O-7)
+    store(TracksTable,
+      Normalize.selectTracksColumns(tracks, conf.extraTimestamps.keys.toSeq), stats)
+    // O-33: per-event-name fan-out; reserved-name collision -> esc_ prefix
+    profile.eventNames.foreach { e =>
+      val tableName = if (DefaultTables.contains(e)) s"esc_$e" else e
+      profile.ofEvent(e).foreach(store(tableName, TypeSplit.filterEvent(tracks, e), _))
+    }
   }
+}
 
-  /** §1.2: columns entirely null in a batch do not participate in DDL that
-    * batch — computed in ONE aggregate over the persisted batch, not a
-    * per-column scan. */
-  private def dropAllNullColumns(df: DataFrame): DataFrame = {
-    val cols = df.columns
-    if (cols.isEmpty) return df
-    val aggs = cols.map(c => count(col(c)).as(c)).toIndexedSeq
-    val row  = df.agg(aggs.head, aggs.tail: _*).head()
-    val dead = cols.zipWithIndex.collect { case (c, i) if row.getLong(i) == 0L => c }
-    df.drop(dead.toIndexedSeq: _*)
-  }
+object SendToWarehouseJob {
+
+  /** Columns that keep their reader type: identifiers and discriminators
+    * are strings whatever their first value looks like. */
+  val InferenceExcluded: Set[String] = Set(MessageId, "anonymous_id", UserId, "ip", "channel",
+    "write_key", TypeCol, EventCol, OriginalEventCol)
 }

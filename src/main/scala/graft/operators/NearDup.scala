@@ -320,7 +320,11 @@ object NearDup {
 
   /** Banding + candidate + verification stages of [[minhashLshPairs]],
     * over a precomputed [[minhashSigs]] frame (which must carry at
-    * least bands·rowsPerBand signature slots). */
+    * least bands·rowsPerBand signature slots). Each row's `sh` column must
+    * be sorted ascending and free of duplicates, as [[minhashSigs]] builds
+    * it: the verification join counts the intersection with a sorted
+    * merge, so an unsorted or repeating `sh` gives wrong Jaccard values
+    * without any error. */
   def minhashLshPairsFromSigs(
       sigs: DataFrame,
       bands: Int,

@@ -221,7 +221,6 @@ class ClickHouseWarehouse(
     * engines without versioned replacement). */
   override def upsertUsers(spark: SparkSession, db: String, identities: DataFrame): Unit = {
     val incoming = Dedup.usersFromIdentities(identities)
-    if (incoming.isEmpty) return
     val authoritative = ensureTableStructure(db, UsersTable, incoming.schema)
     val result = Coerce.coerce(incoming, authoritative, UsersTable)
     try {

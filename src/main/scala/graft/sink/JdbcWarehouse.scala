@@ -166,17 +166,19 @@ class JdbcWarehouse(
       partitionByDate: Boolean = true, // physical layout is the DB's concern
       ddlSchema: Option[StructType] = None
   ): Long = {
-    if (batch.isEmpty) return 0L
     val authoritative = ensureTableStructure(db, t, ddlSchema.getOrElse(batch.schema))
     val result = Coerce.coerce(batch, authoritative, t)
     try {
-      val misfits = Dedup.dedupMisfits(result.misfits).persist()
-      val n = misfits.count()
-      if (n > 0) {
-        ensureTableStructure(db, MisfitsTable, misfits.schema)
-        jdbcWrite(misfits, db, MisfitsTable)
+      val n = if (!result.misfitsPossible) 0L else {
+        val misfits = Dedup.dedupMisfits(result.misfits).persist()
+        val count = misfits.count()
+        if (count > 0) {
+          ensureTableStructure(db, MisfitsTable, misfits.schema)
+          jdbcWrite(misfits, db, MisfitsTable)
+        }
+        misfits.unpersist()
+        count
       }
-      misfits.unpersist()
       jdbcWrite(result.main, db, t)
       n
     } finally result.unpersist()
@@ -184,7 +186,6 @@ class JdbcWarehouse(
 
   override def upsertUsers(spark: SparkSession, db: String, identities: DataFrame): Unit = {
     val incoming = Dedup.usersFromIdentities(identities)
-    if (incoming.isEmpty) return
     val authoritative = ensureTableStructure(db, UsersTable, incoming.schema)
     val result = Coerce.coerce(incoming, authoritative, UsersTable)
     try {

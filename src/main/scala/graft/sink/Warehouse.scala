@@ -12,7 +12,9 @@ trait Warehouse {
 
   /** Insert one batch; table schema is authoritative, misfits quarantined.
     * `ddlSchema` overrides the schema used for table creation/evolution
-    * (first-non-null inference); returns misfit row count. */
+    * (first-non-null inference); returns misfit row count. Implementations
+    * do not probe the batch for rows: the caller skips empty batches, and
+    * an empty one still ensures the table's structure. */
   def insertDf(
       spark: SparkSession,
       db: String,
@@ -22,7 +24,8 @@ trait Warehouse {
       ddlSchema: Option[org.apache.spark.sql.types.StructType] = None
   ): Long
 
-  /** ReplacingMergeTree(ver)-equivalent users upsert. */
+  /** ReplacingMergeTree(ver)-equivalent users upsert. Like `insertDf`, it
+    * runs whatever it is given; the caller skips batches without a user_id. */
   def upsertUsers(spark: SparkSession, db: String, identities: DataFrame): Unit
 
   /** DDL-only: create `db.t` if absent and evolve it (append-only) to cover

@@ -34,7 +34,8 @@ final class WarehouseSink(val catalog: TableCatalog) extends Warehouse {
 
   /** O-31: insert a batch into `db.t`, evolving the schema (append-only) and
     * quarantining coercion failures into the misfits table. Returns the
-    * number of misfit rows written. */
+    * number of misfit rows written. The caller decides emptiness: an empty
+    * batch still ensures the table's structure and appends no rows. */
   override def insertDf(
       spark: SparkSession,
       db: String,
@@ -43,11 +44,10 @@ final class WarehouseSink(val catalog: TableCatalog) extends Warehouse {
       partitionByDate: Boolean = true,
       ddlSchema: Option[StructType] = None
   ): Long = {
-    if (batch.isEmpty) return 0L
     val authoritative = catalog.ensureTableStructure(db, t, ddlSchema.getOrElse(batch.schema))
     val result        = Coerce.coerce(batch, authoritative, t)
     try {
-      val misfitCount = writeMisfits(spark, db, result.misfits)
+      val misfitCount = writeMisfits(spark, db, result)
       val withPart =
         if (partitionByDate && authoritative.fieldNames.contains(Timestamp))
           result.main.withColumn(PartitionCol, to_date(col(Timestamp)))
@@ -64,9 +64,11 @@ final class WarehouseSink(val catalog: TableCatalog) extends Warehouse {
   }
 
   /** O-32: lazy-create + append the misfits dead-letter table (deduped on
-    * its CH sort key first, O-23). */
-  def writeMisfits(spark: SparkSession, db: String, misfits: DataFrame): Long = {
-    val deduped = Dedup.dedupMisfits(misfits).persist()
+    * its CH sort key first, O-23). A coercion that cannot misfit costs no
+    * pass at all. */
+  def writeMisfits(spark: SparkSession, db: String, coerced: Coerce.CoerceResult): Long = {
+    if (!coerced.misfitsPossible) return 0L
+    val deduped = Dedup.dedupMisfits(coerced.misfits).persist()
     try {
       val n = deduped.count()
       if (n > 0) {
@@ -135,14 +137,14 @@ final class WarehouseSink(val catalog: TableCatalog) extends Warehouse {
     * equivalent. Read current users ∪ incoming, keep the max-`ver` row per
     * user_id, atomically replace. The users table is small relative to
     * events (bounded by |distinct users|), so read-merge-overwrite per
-    * batch is the right trade (SURVEY §7.3 hard part 2). */
+    * batch is the right trade (SURVEY §7.3 hard part 2). The caller
+    * decides whether `identities` carries any user_id. */
   override def upsertUsers(spark: SparkSession, db: String, identities: DataFrame): Unit = {
     val incoming = Dedup.usersFromIdentities(identities)
-    if (incoming.isEmpty) return
     val authoritative = catalog.ensureTableStructure(db, UsersTable, incoming.schema)
     val result        = Coerce.coerce(incoming, authoritative, UsersTable)
     try {
-      writeMisfits(spark, db, result.misfits)
+      writeMisfits(spark, db, result)
       val existing = catalog.read(spark, db, UsersTable)
       val aligned =
         if (existing.schema.fields.isEmpty) result.main

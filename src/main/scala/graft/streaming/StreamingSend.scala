@@ -50,7 +50,9 @@ object StreamingSend {
       .option("checkpointLocation", checkpointDir)
       .trigger(trigger)
       .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
-        if (!batch.isEmpty) job.processBatch(batch)
+        // no emptiness probe here: it would re-run the stateful dedup
+        // source, and processBatch's first pass already finds empty batches
+        job.processBatch(batch)
       }
       .start()
   }

@@ -52,6 +52,15 @@ class CoerceSpec extends AnyFunSuite {
     assert(r.main.schema("n").dataType == LongType)
   }
 
+  test("misfitsPossible: false only when no present column changes type") {
+    val same = Seq(("a", 1L)).toDF("message_id", "n")
+    val r = Coerce.coerce(same, target, "tbl", persistIntermediate = false)
+    assert(!r.misfitsPossible) // `extra` is missing, not mismatched
+    assert(r.misfits.isEmpty)
+    val changed = Seq(("a", "1")).toDF("message_id", "n")
+    assert(Coerce.coerce(changed, target, "tbl", persistIntermediate = false).misfitsPossible)
+  }
+
   test("addMissingColumns aligns to target with typed nulls") {
     val df = Seq(("a")).toDF("message_id")
     val out = Coerce.addMissingColumns(df, target)

@@ -40,7 +40,7 @@ class SortedIntersectCountSpec extends AnyFunSuite {
     }
   }
 
-  test("interpreted eval agrees with codegen result") {
+  test("interpreted eval matches set semantics") {
     import org.apache.spark.sql.catalyst.util.GenericArrayData
     cases.foreach { case (a, b) =>
       val e = graft.plans.SortedIntersectCount(
