@@ -5,6 +5,9 @@
 # project lock. Usage:
 #   scripts/graft-java.sh [-mem 48g] graft.Verify <args...>
 set -euo pipefail
+# the checkout this script lives in, and the Spark jars its build names
+ROOT="$(cd "$(dirname "${BASH_SOURCE[0]}")/.." && pwd)"
+JARS="$(sed -n 's/^unmanagedBase := file("\(.*\)")$/\1/p' "$ROOT/build.sbt")"
 MEM="${SPARK_DRIVER_MEM:-8g}"
 if [ "${1:-}" = "-mem" ]; then MEM="$2"; shift 2; fi
 OPENS=""
@@ -19,5 +22,5 @@ exec java $OPENS \
   -Dspark.ui.enabled=false \
   -Dspark.sql.session.timeZone=UTC \
   -Xmx"$MEM" \
-  -cp "/root/repo/target/scala-2.13/classes:/opt/spark/jars/*" \
+  -cp "$ROOT/target/scala-2.13/classes:$JARS/*" \
   "$@"

@@ -1,5 +1,5 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import graft.util.GraftSession
 
 /** Benchmark harness: times every `SparkEntry.queries` entry at the SF dir
   * given by SPARK_GRAFT_SF_DIR and prints ONE JSON line.
@@ -69,41 +69,11 @@ object Bench {
   private def loadAvg(): Double =
     java.lang.management.ManagementFactory.getOperatingSystemMXBean.getSystemLoadAverage
 
-  /** Drop every block-manager-resident RDD the finished query left behind
-    * (judge round-10 headline item: the operator library leans on EAGER
-    * `localCheckpoint(true)` — Datasheet, Packing, graph loops, ~40 sites
-    * — whose blocks are never released, so a 313-query session's
-    * block-manager occupancy grows monotonically and the memory/GC tax
-    * lands on whichever late-alphabet query does the most JVM-side work:
-    * q107 read 14.1 s in r9, q102 5.28 s in r10, both ~1.5-4× their
-    * isolated cost). Safe between queries BECAUSE no DataFrame crosses
-    * query boundaries in this codebase: cross-query reuse is all on-disk
-    * (ANN index, snapshot stores), verified by grep — the only persists
-    * are query-internal. Returns how many RDDs were released, recorded
-    * per pass as the artifact's occupancy witness. */
-  private def releaseRetainedRdds(spark: SparkSession): Int = {
-    val retained = spark.sparkContext.getPersistentRDDs
-    retained.values.foreach(_.unpersist(blocking = false))
-    spark.sharedState.cacheManager.clearCache()
-    retained.size
-  }
-
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val cpus = GraftSession.cpus
     val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "2").toInt.max(1)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // same session TZ as Verify/SendCli/TestSpark: events()'s
-      // TIMESTAMP_NTZ→timestamp cast assumes UTC instants, so on a
-      // non-UTC host an unpinned bench would time DIFFERENT day buckets
-      // than the verified results (r7 advisor finding)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new graft.plans.GraftExtensions)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(cpus)
     FixtureProbe.probe(spark, sfDir)
     // Warm-up: the session's first job pays one-time costs (task scheduler
     // spin-up, Hadoop FS + parquet footer init, whole-stage-codegen
@@ -157,7 +127,7 @@ object Bench {
         }
         // untimed: releasing the finished query's checkpoint blocks is
         // session hygiene, not part of the query's cost
-        released(pass) += releaseRetainedRdds(spark)
+        released(pass) += GraftSession.release(spark)
         sinceSample += 1
         if (sinceSample >= IntraEvery) {
           sinceSample = 0

@@ -1,20 +1,12 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import graft.util.GraftSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new graft.plans.GraftExtensions)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local()
     FixtureProbe.probe(spark, sfDir)
     new java.io.File(outDir).mkdirs()
     // dev-only subsetting for iterating on one query's parity; the driver
@@ -33,10 +25,8 @@ object Verify {
       }
       // release the finished query's eager-checkpoint blocks: a 313-query
       // session otherwise accumulates block-manager occupancy (the r10
-      // full-session inflation finding). Safe: no DataFrame crosses query
-      // boundaries (cross-query reuse is on-disk only).
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
-      spark.sharedState.cacheManager.clearCache()
+      // full-session inflation finding)
+      GraftSession.release(spark)
     }
     // inline the pHash store into the q315/q320 oracles so the dumped
     // oracle_sql.json is self-contained — even when SPARK_GRAFT_VERIFY_ONLY

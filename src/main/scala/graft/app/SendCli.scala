@@ -4,6 +4,7 @@ import org.apache.spark.sql.SparkSession
 
 import graft.jobs.{JobConf, SendToWarehouseJob}
 import graft.streaming.StreamingSend
+import graft.util.GraftSession
 
 /** CLI entry point — the `seghouse send` equivalent (reference
   * seghouse/app.py:16-44). Like the reference it takes `--config-file`
@@ -32,7 +33,7 @@ object SendCli {
       extraTimestamps: Map[String, String] = Map.empty,
       stream: Boolean = false,
       checkpoint: String = "",
-      cpus: String = "4")
+      cpus: Int = 4)
 
   def parse(argv: Seq[String]): Args = {
     def loop(rest: List[String], acc: Args): Args = rest match {
@@ -50,7 +51,7 @@ object SendCli {
         }
       case "--stream" :: t               => loop(t, acc.copy(stream = true))
       case "--checkpoint" :: v :: t      => loop(t, acc.copy(checkpoint = v))
-      case "--cpus" :: v :: t            => loop(t, acc.copy(cpus = v))
+      case "--cpus" :: v :: t            => loop(t, acc.copy(cpus = v.toInt))
       case other :: _ => throw new IllegalArgumentException(s"unknown argument $other")
     }
     val a = loop(argv.toList, Args())
@@ -94,14 +95,7 @@ object SendCli {
 
   def main(argv: Array[String]): Unit = {
     val a = parse(argv.toIndexedSeq)
-    val spark = SparkSession.builder()
-      .master(s"local[${a.cpus}]")
-      .appName("graft-send")
-      .config("spark.sql.shuffle.partitions", a.cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(a.cpus)
     try run(spark, a) finally spark.stop()
   }
 }

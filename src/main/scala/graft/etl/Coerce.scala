@@ -76,17 +76,6 @@ object Coerce {
       d.withColumn(f.name, coalesce(col(f.name), lit(false)).cast(IntegerType))
     }
 
-  /** O-16: default fills (implemented but dormant by default, matching the
-    * reference where only the boolean fill is live — clickhouse.py:197-198). */
-  def fillDefaults(df: DataFrame): DataFrame = {
-    val fills: Map[String, Any] = df.schema.fields.collect {
-      case f if f.dataType == StringType => f.name -> "_default"
-      case f if numericFamily(f.dataType).contains("int") => f.name -> 0L
-      case f if numericFamily(f.dataType).contains("float") => f.name -> 0.0
-    }.toMap
-    df.na.fill(fills)
-  }
-
   /** O-19: coerce `df` to `target` (the authoritative table schema), adding
     * missing columns, try_cast-ing every mismatched column, and quarantining
     * failed cells into a misfit side-output.

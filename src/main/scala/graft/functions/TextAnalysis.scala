@@ -208,16 +208,4 @@ object TextAnalysis {
         sequence(lit(1), size(t) - lit(n - 1)),
         i => concat_ws(" ", slice(t, i, lit(n)))))
   }
-
-  /** Convenience: attach the standard text-analysis columns. */
-  def analyze(df: DataFrame, textCol: String = "text"): DataFrame = {
-    val c = col(textCol)
-    df.withColumn("lang_id", langId(c))
-      .withColumn("n_tokens", tokenCount(c))
-      .withColumn("n_subwords", subwordCount(c))
-      .withColumn("quality", qualitySignals(c))
-      .withColumn("quality_ok", qualityOk(c))
-      .withColumn("fingerprint_md5", canonicalFingerprint(c))
-      .withColumn("fingerprint_rolling", rollingFingerprint(c))
-  }
 }

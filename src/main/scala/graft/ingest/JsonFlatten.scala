@@ -24,27 +24,23 @@ import graft.util.Names
   * later becomes NULL under the table-schema-wins alignment).
   *
   * At 100 TB this matters: the flatten is a pure narrow projection (no
-  * shuffle), pushdown-friendly, and the only action ever run is an optional
-  * bounded `max(size(...))` aggregate per array column when the caller asks
-  * us to observe array lengths (one cheap scan, map-side combined).
+  * shuffle), pushdown-friendly, and the only action ever run is one bounded
+  * `max(size(...))` aggregate per array column that observes array lengths
+  * (one cheap scan, map-side combined).
   */
 object JsonFlatten {
 
   /** Default cap on positional array expansion to keep column count sane. */
-  val DefaultMaxArrayLen = 16
+  private val DefaultMaxArrayLen = 16
 
   private def seg(name: String): String = Names.decamelize(Names.cleanEventKey(name))
 
   /** Collect the flattened projection for a schema.
     *
     * @param arrayLens observed max length per (dotted) array path; paths not
-    *                  present fall back to `defaultLen`.
+    *                  present fall back to `DefaultMaxArrayLen`.
     */
-  def flattenColumns(
-      schema: StructType,
-      arrayLens: Map[String, Int] = Map.empty,
-      defaultLen: Int = DefaultMaxArrayLen
-  ): Seq[Column] = {
+  def flattenColumns(schema: StructType, arrayLens: Map[String, Int] = Map.empty): Seq[Column] = {
 
     def walk(dt: DataType, path: Seq[String], outName: String, c: Column): Seq[(String, Column)] =
       dt match {
@@ -55,7 +51,7 @@ object JsonFlatten {
           }
         case ArrayType(elem, _) =>
           val key = path.mkString(".")
-          val n   = arrayLens.getOrElse(key, defaultLen)
+          val n   = arrayLens.getOrElse(key, DefaultMaxArrayLen)
           (0 until n).flatMap { i =>
             // try_element_at: rows whose list is shorter than the observed
             // max yield NULL (ANSI-safe), matching the reference's
@@ -74,20 +70,11 @@ object JsonFlatten {
     }.map { case (n, c) => c.as(n) }
   }
 
-  /** Flatten a DataFrame. If `observeArrayLens`, run one aggregate to find
-    * the true max length of every (top-level-reachable) array column so the
-    * positional expansion matches the reference exactly; otherwise use
-    * `defaultLen`. */
-  def flatten(
-      df: DataFrame,
-      observeArrayLens: Boolean = true,
-      defaultLen: Int = DefaultMaxArrayLen
-  ): DataFrame = {
-    val lens =
-      if (observeArrayLens) observeArrayLengths(df)
-      else Map.empty[String, Int]
-    df.select(flattenColumns(df.schema, lens, defaultLen): _*)
-  }
+  /** Flatten a DataFrame, after one aggregate finds the true max length of
+    * every (top-level-reachable) array column so the positional expansion
+    * matches the reference exactly. */
+  def flatten(df: DataFrame): DataFrame =
+    df.select(flattenColumns(df.schema, observeArrayLengths(df)): _*)
 
   /** One pass computing max(size(arr)) for every array path in the schema.
     * Arrays nested under other arrays are sized via transform+max so the

@@ -90,8 +90,8 @@ object Funnel {
     * whale's events), which is quadratic in total activity. An event's
     * single bucket matches at most one of the anchor's two bucket rows,
     * so no pair duplicates and the per-anchor min is unchanged.
-    * `tools/FunnelScaleCheck` measures the two shapes under a
-    * whale-user flood.
+    * PLANS.md ("Funnel whale-flood evidence") records the two shapes
+    * measured under a whale-user flood.
     *
     * @return one row per user in `df`: (user_id, level) — level 0 when
     *         no step-1 event exists

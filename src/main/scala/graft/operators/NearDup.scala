@@ -908,7 +908,8 @@ object NearDup {
     * materialized for the two consumers — at the 100× evidence rung
     * (97.75M gram rows) the round-14 probe measured that checkpoint at
     * 59–115 s and the double shuffle at 78–92 s, vs 34–74 s for this
-    * single-exchange shape (ScratchProbe, /tmp/graft_sweep_scale_100x).
+    * single-exchange shape (SweepScaleCheck's 100× corpus; re-measure with
+    * tools/JobStatsProbe).
     * Window-partition skew is bounded by construction: grams are
     * per-doc deduped, so a gram's partition holds at most one row per
     * document that contains it — the same single-reducer bound the

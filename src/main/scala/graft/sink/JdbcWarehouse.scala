@@ -163,7 +163,6 @@ class JdbcWarehouse(
       db: String,
       t: String,
       batch: DataFrame,
-      partitionByDate: Boolean = true, // physical layout is the DB's concern
       ddlSchema: Option[StructType] = None
   ): Long = {
     val authoritative = ensureTableStructure(db, t, ddlSchema.getOrElse(batch.schema))

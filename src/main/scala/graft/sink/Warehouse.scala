@@ -20,7 +20,6 @@ trait Warehouse {
       db: String,
       t: String,
       batch: DataFrame,
-      partitionByDate: Boolean = true,
       ddlSchema: Option[org.apache.spark.sql.types.StructType] = None
   ): Long
 

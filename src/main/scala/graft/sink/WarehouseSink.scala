@@ -41,7 +41,6 @@ final class WarehouseSink(val catalog: TableCatalog) extends Warehouse {
       db: String,
       t: String,
       batch: DataFrame,
-      partitionByDate: Boolean = true,
       ddlSchema: Option[StructType] = None
   ): Long = {
     val authoritative = catalog.ensureTableStructure(db, t, ddlSchema.getOrElse(batch.schema))
@@ -49,7 +48,7 @@ final class WarehouseSink(val catalog: TableCatalog) extends Warehouse {
     try {
       val misfitCount = writeMisfits(spark, db, result)
       val withPart =
-        if (partitionByDate && authoritative.fieldNames.contains(Timestamp))
+        if (authoritative.fieldNames.contains(Timestamp))
           result.main.withColumn(PartitionCol, to_date(col(Timestamp)))
         else result.main
       val writer =

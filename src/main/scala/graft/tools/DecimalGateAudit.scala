@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
+import graft.util.GraftSession
 import org.apache.spark.sql.types.{ArrayType, DataType, DecimalType, MapType, StructType}
 
 /** STANDING GATE against DECIMAL columns in gated query output (judge
@@ -64,14 +64,7 @@ object DecimalGateAudit {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new graft.plans.GraftExtensions)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession.local()
 
     val names = if (args.nonEmpty) args.toSeq else graft.SparkEntry.queries.keys.toSeq.sorted
     var failures = Vector.empty[(String, Seq[String])]
@@ -87,8 +80,7 @@ object DecimalGateAudit {
       }
       // query construction runs eager checkpoints (see scaladoc) — release
       // them so walking 314 queries doesn't accumulate block-manager state
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
-      spark.sharedState.cacheManager.clearCache()
+      GraftSession.release(spark)
     }
     // oracle-side scan (round-11 item #7): textual convention check over
     // SparkEntry.oracleSql — see scaladoc for what it can and cannot catch

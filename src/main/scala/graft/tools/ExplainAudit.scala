@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
+import graft.util.GraftSession
 
 /** Prints formatted physical plans for the headline queries so plan
   * regressions (lost pushdown, surprise shuffles, missed broadcasts) are
@@ -8,14 +8,7 @@ import org.apache.spark.sql.SparkSession
 object ExplainAudit {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new graft.plans.GraftExtensions)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession.local()
     // CosineFusion audit: the NAIVE dot/(norm·norm) formulation, written
     // through the registered SQL functions, must plan as the fused
     // one-pass expression in this (extensions-installed, same as

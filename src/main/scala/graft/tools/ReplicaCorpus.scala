@@ -3,6 +3,8 @@ package graft.tools
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.util.GraftSession
+
 /** Disjoint-replica corpus builder for at-scale evidence runs (judge
   * round-10 item #4: one FULL-surface Verify+check at 10×, not just the
   * instrument family SweepScaleCheck already covers).
@@ -142,14 +144,7 @@ object ReplicaCorpus {
     val factor = args.drop(2).headOption.map(_.toInt).getOrElse(10)
     val outDir = args.drop(1).headOption.getOrElse(
       s"${sys.props("java.io.tmpdir")}/graft_replica_${factor}x")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession.local()
     val t0 = System.nanoTime()
     build(spark, srcDir, outDir, factor)
     println(f"REPLICA corpus: ${factor}x of $srcDir -> $outDir in " +

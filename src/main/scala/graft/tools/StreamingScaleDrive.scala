@@ -9,6 +9,8 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQueryListener
 import org.apache.spark.sql.types._
 
+import graft.util.GraftSession
+
 /** At-scale STREAMING evidence drive (judge round-14 item #3): the
   * streaming twins are certified equivalent on toy fixtures
   * (StreamingSpec's restart cases), but nothing had witnessed watermark
@@ -232,15 +234,7 @@ object StreamingScaleDrive {
     val workDir = args.lift(1).getOrElse("/tmp/graft_stream_scale")
     val chunks = args.lift(2).map(_.toInt).getOrElse(32)
     val filesPerTrigger = args.lift(3).map(_.toInt).getOrElse(4)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new graft.plans.GraftExtensions)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession.local()
     val work = Paths.get(workDir)
     if (Files.exists(work)) deleteRec(work)
     val t0 = System.nanoTime()

@@ -2,6 +2,8 @@ package graft.tools
 
 import org.apache.spark.sql.SparkSession
 
+import graft.util.GraftSession
+
 /** At-scale evidence for the round-9 instrument/sweep family (judge
   * round-9 item #5): q293 (shingle-size sweep), q299 (LSH band-geometry
   * sweep with an Exhaustive truth pass), q301 (probe-radius sweep with
@@ -108,15 +110,7 @@ object SweepScaleCheck {
       val fs = args.drop(1).map(_.toInt)
       if (fs.isEmpty) Seq(10) else fs.toSeq
     }
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new graft.plans.GraftExtensions)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession.local()
 
     def run(dir: String, label: String, factor: Int): Unit = {
       println(s"\n== $label ==")
@@ -134,7 +128,7 @@ object SweepScaleCheck {
             println(f"$q%-28s FAILED after ${(System.nanoTime() - s0) / 1e9}%.1f s: " +
               Option(e.getMessage).getOrElse(e.getClass.getName).take(200))
         }
-        releaseRetained(spark)
+        GraftSession.release(spark)
       }
       val pinned = if (factor <= 10) PinnedQuadratic else Seq.empty
       if (factor > 10) PinnedQuadratic.foreach(q => println(
@@ -149,7 +143,7 @@ object SweepScaleCheck {
             println(f"$q%-28s FAILED after ${(System.nanoTime() - s0) / 1e9}%.1f s: " +
               Option(e.getMessage).getOrElse(e.getClass.getName).take(200))
         }
-        releaseRetained(spark)
+        GraftSession.release(spark)
       }
     }
 
@@ -167,15 +161,5 @@ object SweepScaleCheck {
       run(bigDir, s"${factor}x corpus ($bigDir)", factor)
     }
     spark.stop()
-  }
-
-  /** Between-queries hygiene (the Bench discipline): release the eager
-    * localCheckpoint blocks the finished query left in the block
-    * manager, so a long multi-rung session's occupancy stays flat. Safe
-    * because no DataFrame crosses query boundaries (cross-query reuse
-    * is on-disk only — ANN index, snapshot stores). */
-  private def releaseRetained(spark: SparkSession): Unit = {
-    spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
-    spark.sharedState.cacheManager.clearCache()
   }
 }

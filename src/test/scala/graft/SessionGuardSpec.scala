@@ -1,0 +1,31 @@
+package graft
+
+import java.nio.file.{Files, Path, Paths}
+import scala.jdk.CollectionConverters._
+
+import org.scalatest.funsuite.AnyFunSuite
+
+/** Source guard, no Spark: main code builds its session and releases
+  * retained blocks only through `graft.util.GraftSession`, so Bench, Verify
+  * and the tools cannot drift apart in config again. */
+class SessionGuardSpec extends AnyFunSuite {
+  private val root = Paths.get("src/main/scala")
+  private val factory = Paths.get("graft/util/GraftSession.scala")
+
+  private def filesMentioning(token: String): Seq[Path] = {
+    assert(Files.isDirectory(root), s"run from the project root: $root not found")
+    val walk = Files.walk(root)
+    try walk.iterator().asScala.toList
+      .filter(p => Files.isRegularFile(p) && Files.readString(p).contains(token))
+      .map(root.relativize)
+    finally walk.close()
+  }
+
+  test("SparkSession.builder appears only in GraftSession") {
+    assert(filesMentioning("SparkSession.builder") == Seq(factory))
+  }
+
+  test("getPersistentRDDs appears only in GraftSession") {
+    assert(filesMentioning("getPersistentRDDs") == Seq(factory))
+  }
+}
