@@ -73,10 +73,8 @@ object SendCli {
       skipFields = (file.skipFields ++ a.skipFields).distinct,
       extraTimestamps = file.extraTimestamps ++ a.extraTimestamps,
       warehouseRoots = a.warehouseRoots,
-      jdbcSinks = a.jdbcUrls.map(u => (u, Map.empty[String, String])),
-      warehouseConfs = file.warehouses)
-    require(
-      conf.warehouseRoots.nonEmpty || conf.jdbcSinks.nonEmpty || conf.warehouseConfs.nonEmpty,
+      warehouseConfs = a.jdbcUrls.map(u => Map("type" -> "jdbc", "url" -> u)) ++ file.warehouses)
+    require(conf.warehouseRoots.nonEmpty || conf.warehouseConfs.nonEmpty,
       "no warehouses configured (config file has none and no flags given)")
     conf
   }

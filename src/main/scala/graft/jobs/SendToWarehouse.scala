@@ -17,9 +17,8 @@ final case class JobConf(
     skipFields: Seq[String] = Nil,
     extraTimestamps: Map[String, String] = Map.empty,
     warehouseRoots: Seq[String] = Nil,
-    jdbcSinks: Seq[(String, Map[String, String])] = Nil,
-    /** Typed warehouse dicts from a config file (configuration.py:27),
-      * dispatched by [[graft.sink.WarehouseFactory.fromConf]]. */
+    /** Typed warehouse dicts (configuration.py:27) from a config file or a
+      * `--jdbc-url` flag, dispatched by [[graft.sink.WarehouseFactory.fromConf]]. */
     warehouseConfs: Seq[Map[String, String]] = Nil
 )
 
@@ -53,7 +52,6 @@ final class SendToWarehouseJob(
 
   private val sinks: Seq[graft.sink.Warehouse] =
     conf.warehouseRoots.map(graft.sink.WarehouseFactory.parquet) ++
-      conf.jdbcSinks.map { case (url, props) => graft.sink.WarehouseFactory.jdbc(url, props) } ++
       conf.warehouseConfs.map(graft.sink.WarehouseFactory.fromConf)
 
   def execute(sourceDir: String): Unit = {
@@ -125,7 +123,7 @@ final class SendToWarehouseJob(
     val pruned  = df.drop(stats.deadColumns(df.schema): _*)
     val refined = stats.refinedSchema(pruned.schema)
     // O-35: DDL side effect on the batch's own table (groups/aliases)
-    structureTable.foreach(st => sinks.foreach(_.ensureStructure(schema, st, refined)))
+    structureTable.foreach(st => sinks.foreach(_.ensureTableStructure(schema, st, refined)))
     sinks.foreach(_.insertDf(spark, schema, table, pruned, ddlSchema = Some(refined)))
   }
 

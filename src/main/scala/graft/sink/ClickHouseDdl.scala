@@ -150,18 +150,12 @@ class ClickHouseWarehouse(
   import scala.collection.mutable
   import scala.util.Using
   import org.apache.spark.sql.{DataFrame, SparkSession}
-  import org.apache.spark.sql.functions.col
-  import graft.etl.{Coerce, Dedup}
   import graft.model.EventSchema._
 
   // ClickHouse identifiers are case-sensitive; the reference passes the
   // schema name through untouched (clickhouse.py:61)
   override protected def dbName(db: String): String = db
   override protected def q(ident: String): String = ClickHouseDdl.q(ident)
-
-  private def exec(sql: String): Unit = withConn { c =>
-    Using.resource(c.createStatement())(_.executeUpdate(sql)); ()
-  }
 
   /** CREATE DATABASE IF NOT EXISTS — idempotent, no metadata probe
     * (create_schema, clickhouse.py:59-66; ON CLUSTER when configured,
@@ -214,19 +208,13 @@ class ClickHouseWarehouse(
       "Table .{0,200}(doesn't|does not) exist".r.findFirstIn(msg).isDefined
   }
 
-  /** Users upsert, ClickHouse-style: dedupe the batch to per-user winners
-    * and INSERT — ReplacingMergeTree(ver) resolves versions server-side
+  /** Users upsert, ClickHouse-style: the batch's per-user winners are
+    * INSERTed and ReplacingMergeTree(ver) resolves versions server-side
     * (clickhouse.py:95-123), so there is no read-back, no truncate, and no
     * staging swap (those are the ANSI base class's compensations for
     * engines without versioned replacement). */
-  override def upsertUsers(spark: SparkSession, db: String, identities: DataFrame): Unit = {
-    val incoming = Dedup.usersFromIdentities(identities)
-    val authoritative = ensureTableStructure(db, UsersTable, incoming.schema)
-    val result = Coerce.coerce(incoming, authoritative, UsersTable)
-    try {
-      val winners = Dedup.lastWriteWins(
-        result.main, Seq(UserId), Ver, Seq(col(MessageId).desc))
-      jdbcWrite(winners, db, UsersTable)
-    } finally result.unpersist()
-  }
+  override protected def currentUsers(spark: SparkSession, db: String): Option[DataFrame] = None
+
+  override protected def replaceUsers(db: String, winners: DataFrame): Unit =
+    jdbcWrite(winners, db, UsersTable)
 }

@@ -7,14 +7,12 @@ import scala.collection.mutable
 import scala.util.Using
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.etl.{Coerce, Dedup}
 import graft.model.EventSchema._
 
-/** JDBC warehouse sink — the "Structured Streaming + JDBC sink" shape: the
-  * same schema-evolving insert protocol as the parquet sink, but DDL runs
+/** JDBC warehouse sink — the "Structured Streaming + JDBC sink" shape:
+  * [[Warehouse]]'s schema-evolving load protocol, with DDL running
   * over a JDBC connection exactly like the reference drives ClickHouse
   * (CREATE SCHEMA / CREATE TABLE IF missing / metadata describe / ALTER
   * TABLE ADD COLUMN — clickhouse.py:59-191), and data lands via Spark's
@@ -44,6 +42,10 @@ class JdbcWarehouse(
 
   protected def withConn[T](f: Connection => T): T =
     Using.resource(connect())(f)
+
+  protected def exec(sql: String): Unit = withConn { c =>
+    Using.resource(c.createStatement())(_.executeUpdate(sql)); ()
+  }
 
   protected def q(ident: String): String = "\"" + ident + "\""
 
@@ -125,31 +127,20 @@ class JdbcWarehouse(
   /** CREATE TABLE if absent (memoized), then ALTER TABLE ADD COLUMN for
     * every new column — append-only evolution, O-27/O-30. Returns the
     * post-evolution schema. */
-  def ensureTableStructure(db: String, t: String, batchSchema: StructType): StructType = {
+  override def ensureTableStructure(db: String, t: String, batchSchema: StructType): StructType = {
     // not memoized, same reasoning as TableCatalog.ensureTableStructure:
     // the describe must stay fresh under concurrent evolution
     describe(db, t) match {
       case None =>
-        withConn { c =>
-          Using.resource(c.createStatement())(
-            _.executeUpdate(createTableSql(db, t, batchSchema)))
-        }
+        exec(createTableSql(db, t, batchSchema))
         batchSchema
       case Some(existing) =>
         // JDBC metadata uppercases unquoted... we quote, so names match
         val known = existing.fieldNames.toSet
         val newCols = batchSchema.fields.filterNot(f => known(f.name))
-        newCols.foreach { f =>
-          withConn { c =>
-            Using.resource(c.createStatement())(_.executeUpdate(addColumnSql(db, t, f)))
-          }
-        }
+        newCols.foreach(f => exec(addColumnSql(db, t, f)))
         StructType(existing.fields ++ newCols)
     }
-  }
-
-  override def ensureStructure(db: String, t: String, ddlSchema: StructType): Unit = {
-    ensureTableStructure(db, t, ddlSchema); ()
   }
 
   protected def jdbcWrite(df: DataFrame, db: String, t: String): Unit =
@@ -158,77 +149,37 @@ class JdbcWarehouse(
   def read(spark: SparkSession, db: String, t: String): DataFrame =
     spark.read.jdbc(url, tableRef(db, t), props)
 
-  override def insertDf(
-      spark: SparkSession,
-      db: String,
-      t: String,
-      batch: DataFrame,
-      ddlSchema: Option[StructType] = None
-  ): Long = {
-    val authoritative = ensureTableStructure(db, t, ddlSchema.getOrElse(batch.schema))
-    val result = Coerce.coerce(batch, authoritative, t)
-    try {
-      val n = if (!result.misfitsPossible) 0L else {
-        val misfits = Dedup.dedupMisfits(result.misfits).persist()
-        val count = misfits.count()
-        if (count > 0) {
-          ensureTableStructure(db, MisfitsTable, misfits.schema)
-          jdbcWrite(misfits, db, MisfitsTable)
-        }
-        misfits.unpersist()
-        count
-      }
-      jdbcWrite(result.main, db, t)
-      n
-    } finally result.unpersist()
-  }
+  override protected def append(df: DataFrame, db: String, t: String): Unit =
+    jdbcWrite(df, db, t)
 
-  override def upsertUsers(spark: SparkSession, db: String, identities: DataFrame): Unit = {
-    val incoming = Dedup.usersFromIdentities(identities)
-    val authoritative = ensureTableStructure(db, UsersTable, incoming.schema)
-    val result = Coerce.coerce(incoming, authoritative, UsersTable)
-    try {
-      val existing: Option[DataFrame] = describe(db, UsersTable).map(_ => read(spark, db, UsersTable))
-      val aligned = existing match {
-        case Some(ex) if ex.columns.nonEmpty =>
-          Coerce.coerce(Coerce.addMissingColumns(ex, authoritative), authoritative,
-            UsersTable, persistIntermediate = false).main
-            .unionByName(result.main, allowMissingColumns = true)
-        case _ => result.main
-      }
-      val winners = Dedup.lastWriteWins(aligned, Seq(UserId), Ver, Seq(col(MessageId).desc))
-        .localCheckpoint(true) // materialize BEFORE touching the sink table
-      // Stage-then-swap: land winners in a staging table via the distributed
-      // writer, then replace the live table's rows in ONE transaction — a
-      // crash mid-upsert can no longer leave users empty (the parquet sink
-      // swaps directories for the same reason; the reference never truncates,
-      // ReplacingMergeTree does the replacement server-side).
-      val stage = UsersTable + "__stage"
-      if (describe(db, stage).isDefined) withConn { c =>
-        Using.resource(c.createStatement())(_.executeUpdate(s"DROP TABLE ${tableRef(db, stage)}"))
-      }
-      val colsSql = winners.schema.fields
-        .map(f => s"${q(f.name)} ${typeSql(f.dataType)}").mkString(", ")
-      withConn { c =>
-        Using.resource(c.createStatement())(
-          _.executeUpdate(s"CREATE TABLE ${tableRef(db, stage)} ($colsSql)"))
-      }
-      jdbcWrite(winners, db, stage)
-      val colList = winners.schema.fieldNames.map(q).mkString(", ")
-      withConn { c =>
-        c.setAutoCommit(false)
-        try {
-          Using.resource(c.createStatement()) { st =>
-            st.executeUpdate(s"DELETE FROM ${tableRef(db, UsersTable)}")
-            st.executeUpdate(
-              s"INSERT INTO ${tableRef(db, UsersTable)} ($colList) " +
-                s"SELECT $colList FROM ${tableRef(db, stage)}")
-          }
-          c.commit()
-        } catch { case e: Throwable => c.rollback(); throw e }
-        finally c.setAutoCommit(true)
-        Using.resource(c.createStatement())(_.executeUpdate(s"DROP TABLE ${tableRef(db, stage)}"))
-      }
-    } finally result.unpersist()
+  override protected def currentUsers(spark: SparkSession, db: String): Option[DataFrame] =
+    Some(read(spark, db, UsersTable))
+
+  /** Stage-then-swap: land the winners in a staging table via the
+    * distributed writer, then replace the live table's rows in ONE
+    * transaction — a crash mid-upsert cannot leave users empty (the parquet
+    * sink swaps directories for the same reason; the reference never
+    * truncates, ReplacingMergeTree does the replacement server-side). */
+  override protected def replaceUsers(db: String, winners: DataFrame): Unit = {
+    val staged = winners.localCheckpoint(true) // materialize BEFORE touching the sink table
+    val stage = UsersTable + "__stage"
+    if (describe(db, stage).isDefined) exec(s"DROP TABLE ${tableRef(db, stage)}")
+    exec(createTableSql(db, stage, staged.schema))
+    jdbcWrite(staged, db, stage)
+    val colList = staged.schema.fieldNames.map(q).mkString(", ")
+    withConn { c =>
+      c.setAutoCommit(false)
+      try {
+        Using.resource(c.createStatement()) { st =>
+          st.executeUpdate(s"DELETE FROM ${tableRef(db, UsersTable)}")
+          st.executeUpdate(
+            s"INSERT INTO ${tableRef(db, UsersTable)} ($colList) " +
+              s"SELECT $colList FROM ${tableRef(db, stage)}")
+        }
+        c.commit()
+      } catch { case e: Throwable => c.rollback(); throw e }
+      finally c.setAutoCommit(true)
+      Using.resource(c.createStatement())(_.executeUpdate(s"DROP TABLE ${tableRef(db, stage)}"))
+    }
   }
 }

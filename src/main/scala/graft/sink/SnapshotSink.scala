@@ -18,14 +18,15 @@ import org.apache.spark.sql.functions._
   *   data/<token>/part-*.parquet   — each commit writes a FRESH subdir
   *   _manifests/v<N>.json          — file list + row count; rename-committed
   *
-  * Commit protocol: write data files → write `v<N>.json.tmp` → rename to
-  * `v<N>.json` (atomic on HDFS/posix). A crash before the rename leaves
-  * orphan data files and a `.tmp` — both invisible to readers, who only
-  * trust fully-renamed manifests. The latest snapshot IS max(N) over
-  * committed manifests, so there is no second pointer file to race on.
-  * Single concurrent committer assumed (the version counter is
-  * read-allocate-rename); readers need no coordination at any
-  * concurrency.
+  * Commit protocol: write data files → write `v<N>.<uuid>.json.tmp` →
+  * rename to `v<N>.json` (atomic on HDFS/posix). A crash before the
+  * rename leaves orphan data files and a `.tmp` — both invisible to
+  * readers, who only trust fully-renamed manifests. The latest snapshot IS
+  * max(N) over committed manifests, so there is no second pointer file to
+  * race on. The version counter is read-allocate-rename: when concurrent
+  * committers pick the same N, one rename wins and the others throw
+  * rather than report a commit they did not make; readers need no
+  * coordination at any concurrency.
   *
   * Scale notes: the manifest holds file PATHS (O(files), KBs–MBs at
   * 100 TB with sane file sizing) — never row data; the row count comes
@@ -109,7 +110,7 @@ object SnapshotSink {
     val mdir = manifestDir(root)
     val f = fs(spark, mdir)
     f.mkdirs(mdir)
-    val tmp = new Path(mdir, s"v$version.json.tmp")
+    val tmp = uniqueTmp(mdir, s"v$version")
     val fin = new Path(mdir, s"v$version.json")
     val json = {
       def q(s: String) = "\"" + s.replace("\\", "\\\\").replace("\"", "\\\"") + "\""
@@ -118,9 +119,28 @@ object SnapshotSink {
     val out = f.create(tmp, true)
     try out.write(json.getBytes(java.nio.charset.StandardCharsets.UTF_8))
     finally out.close()
-    if (!f.rename(tmp, fin))
-      throw new IllegalStateException(s"snapshot commit failed: cannot rename $tmp to $fin")
+    renameOrThrow(f, tmp, fin, "snapshot commit")
     Snapshot(version, files, rows)
+  }
+
+  /** Each committer's own temp file, so two committers that picked the same
+    * N never write or rename each other's. The `.json.tmp` ending is what
+    * [[vacuum]] sweeps; the `v\d+\.json` listing filter never sees it. */
+  private def uniqueTmp(dir: Path, name: String): Path =
+    new Path(dir, s"$name.${java.util.UUID.randomUUID()}.json.tmp")
+
+  /** Rename-commit `tmp` as `fin`, never over an existing file: the
+    * committer that loses the race for `fin` throws. The explicit check
+    * covers filesystems whose rename would replace the target (the local
+    * one); committers in this JVM run check and rename under one lock, and
+    * across processes the guarantee is the filesystem's (HDFS rename
+    * refuses an existing target atomically). */
+  private def renameOrThrow(f: org.apache.hadoop.fs.FileSystem, tmp: Path, fin: Path,
+      what: String): Unit = synchronized {
+    if (f.exists(fin) || !f.rename(tmp, fin)) {
+      f.delete(tmp, false)
+      throw new IllegalStateException(s"$what failed: cannot rename $tmp to $fin")
+    }
   }
 
   /** Write `df` as the next snapshot version and commit it atomically.
@@ -257,14 +277,13 @@ object SnapshotSink {
     val f = fs(spark, pdir)
     f.mkdirs(pdir)
     val seq = publishSeqs(spark, root).lastOption.getOrElse(0) + 1
-    val tmp = new Path(pdir, s"p$seq.json.tmp")
+    val tmp = uniqueTmp(pdir, s"p$seq")
     val fin = new Path(pdir, s"p$seq.json")
     val out = f.create(tmp, true)
     try out.write(s"""{"seq":$seq,"version":$version}"""
       .getBytes(java.nio.charset.StandardCharsets.UTF_8))
     finally out.close()
-    if (!f.rename(tmp, fin))
-      throw new IllegalStateException(s"publish failed: cannot rename $tmp to $fin")
+    renameOrThrow(f, tmp, fin, "publish")
   }
 
   /** The currently published version (highest-sequence pointer), or

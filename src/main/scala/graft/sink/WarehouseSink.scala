@@ -1,25 +1,21 @@
 package graft.sink
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, DataFrameWriter, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.etl.{Coerce, Dedup}
 import graft.model.EventSchema._
 
-/** The warehouse load path (reference O-24, O-25, O-31, O-32, O-28/O-21).
+/** The parquet lakehouse storage under [[Warehouse]]'s load protocol
+  * (reference O-24, O-25, O-22).
   *
   * Physical layout mirrors what the reference delegates to ClickHouse
   * MergeTree: date partitioning (`PARTITION BY toDate(timestamp)`,
   * clickhouse.py:86) becomes `partitionBy(event_date)`, and the
   * `(timestamp, message_id)` sort key (clickhouse.py:87) becomes
   * `sortWithinPartitions` — giving parquet row-group locality /
-  * min-max-pruning on the same keys CH clusters on.
-  *
-  * Insert protocol (clickhouse.py:193-215): the table schema is
-  * authoritative; the batch is aligned (missing columns added as NULL),
-  * coerced with misfit quarantine, then appended. The reference's
-  * copy/pivot-to-rows dance disappears: one aligned projection + one
+  * min-max-pruning on the same keys CH clusters on. The reference's
+  * copy/pivot-to-rows insert dance disappears: one aligned projection + one
   * distributed partitioned write.
   */
 final class WarehouseSink(val catalog: TableCatalog) extends Warehouse {
@@ -28,55 +24,21 @@ final class WarehouseSink(val catalog: TableCatalog) extends Warehouse {
 
   override def createDatabase(db: String): Unit = catalog.createDatabase(db)
 
-  override def ensureStructure(db: String, t: String, ddlSchema: StructType): Unit = {
-    catalog.ensureTableStructure(db, t, ddlSchema); ()
-  }
+  override def ensureTableStructure(db: String, t: String, schema: StructType): StructType =
+    catalog.ensureTableStructure(db, t, schema)
 
-  /** O-31: insert a batch into `db.t`, evolving the schema (append-only) and
-    * quarantining coercion failures into the misfits table. Returns the
-    * number of misfit rows written. The caller decides emptiness: an empty
-    * batch still ensures the table's structure and appends no rows. */
-  override def insertDf(
-      spark: SparkSession,
-      db: String,
-      t: String,
-      batch: DataFrame,
-      ddlSchema: Option[StructType] = None
-  ): Long = {
-    val authoritative = catalog.ensureTableStructure(db, t, ddlSchema.getOrElse(batch.schema))
-    val result        = Coerce.coerce(batch, authoritative, t)
-    try {
-      val misfitCount = writeMisfits(spark, db, result)
-      val withPart =
-        if (authoritative.fieldNames.contains(Timestamp))
-          result.main.withColumn(PartitionCol, to_date(col(Timestamp)))
-        else result.main
-      val writer =
-        if (withPart.columns.contains(PartitionCol))
-          withPart
-            .sortWithinPartitions(col(Timestamp), col(MessageId))
-            .write.partitionBy(PartitionCol)
-        else withPart.write
-      writer.mode("append").parquet(catalog.tablePath(db, t))
-      misfitCount
-    } finally result.unpersist()
-  }
+  /** Date-partitioned, sort-key-clustered append (O-24/O-25). */
+  override protected def append(df: DataFrame, db: String, t: String): Unit =
+    layout(df).mode("append").parquet(catalog.tablePath(db, t))
 
-  /** O-32: lazy-create + append the misfits dead-letter table (deduped on
-    * its CH sort key first, O-23). A coercion that cannot misfit costs no
-    * pass at all. */
-  def writeMisfits(spark: SparkSession, db: String, coerced: Coerce.CoerceResult): Long = {
-    if (!coerced.misfitsPossible) return 0L
-    val deduped = Dedup.dedupMisfits(coerced.misfits).persist()
-    try {
-      val n = deduped.count()
-      if (n > 0) {
-        catalog.ensureTableStructure(db, MisfitsTable, deduped.schema)
-        deduped.write.mode("append").parquet(catalog.tablePath(db, MisfitsTable))
-      }
-      n
-    } finally { deduped.unpersist(); () }
-  }
+  /** The MergeTree layout: `partitionBy(to_date(timestamp))`, sorted on
+    * `(timestamp, message_id)` within each partition; a table without a
+    * timestamp (misfits) is written as is. */
+  private def layout(df: DataFrame): DataFrameWriter[Row] =
+    if (!df.columns.contains(Timestamp)) df.write
+    else df.withColumn(PartitionCol, to_date(col(Timestamp)))
+      .sortWithinPartitions(col(Timestamp), col(MessageId))
+      .write.partitionBy(PartitionCol)
 
   /** O-22, deferred half: the explicit analog of ClickHouse's background
     * merge for `ReplacingMergeTree() ORDER BY (timestamp, message_id)`
@@ -99,17 +61,7 @@ final class WarehouseSink(val catalog: TableCatalog) extends Warehouse {
       .localCheckpoint(true) // materialize before replacing the source files
     val before = current.count()
     val after  = deduped.count()
-    val withPart =
-      if (deduped.columns.contains(PartitionCol)) deduped
-      else if (deduped.columns.contains(Timestamp))
-        deduped.withColumn(PartitionCol, to_date(col(Timestamp)))
-      else deduped
-    val writer =
-      if (withPart.columns.contains(PartitionCol) && dedupKeys.contains(Timestamp))
-        withPart.sortWithinPartitions(col(Timestamp), col(MessageId))
-          .write.partitionBy(PartitionCol)
-      else withPart.write
-    replaceTableContents(spark, db, t)(tmp => writer.mode("overwrite").parquet(tmp))
+    replaceTableContents(spark, db, t)(tmp => layout(deduped).mode("overwrite").parquet(tmp))
     before - after
   }
 
@@ -132,31 +84,14 @@ final class WarehouseSink(val catalog: TableCatalog) extends Warehouse {
     ()
   }
 
-  /** O-21/O-28: last-write-wins users upsert — the ReplacingMergeTree(ver)
-    * equivalent. Read current users ∪ incoming, keep the max-`ver` row per
-    * user_id, atomically replace. The users table is small relative to
-    * events (bounded by |distinct users|), so read-merge-overwrite per
-    * batch is the right trade (SURVEY §7.3 hard part 2). The caller
-    * decides whether `identities` carries any user_id. */
-  override def upsertUsers(spark: SparkSession, db: String, identities: DataFrame): Unit = {
-    val incoming = Dedup.usersFromIdentities(identities)
-    val authoritative = catalog.ensureTableStructure(db, UsersTable, incoming.schema)
-    val result        = Coerce.coerce(incoming, authoritative, UsersTable)
-    try {
-      writeMisfits(spark, db, result)
-      val existing = catalog.read(spark, db, UsersTable)
-      val aligned =
-        if (existing.schema.fields.isEmpty) result.main
-        else {
-          val exCoerced = Coerce.coerce(Coerce.addMissingColumns(existing, authoritative),
-            authoritative, UsersTable, persistIntermediate = false)
-          exCoerced.main.unionByName(result.main, allowMissingColumns = true)
-        }
-      val winners = Dedup.lastWriteWins(aligned, Seq(UserId), Ver, Seq(col(MessageId).desc))
-      // stage-then-swap: parquet has no transactional replace; a crash
-      // never leaves a truncated users table
-      replaceTableContents(spark, db, UsersTable)(tmp =>
-        winners.write.mode("overwrite").parquet(tmp))
-    } finally result.unpersist()
-  }
+  override protected def currentUsers(spark: SparkSession, db: String): Option[DataFrame] =
+    Some(catalog.read(spark, db, UsersTable))
+
+  /** The users table is small relative to events (bounded by |distinct
+    * users|), so read-merge-overwrite per batch is the right trade (SURVEY
+    * §7.3 hard part 2). Stage-then-swap: parquet has no transactional
+    * replace; a crash never leaves a truncated users table. */
+  override protected def replaceUsers(db: String, winners: DataFrame): Unit =
+    replaceTableContents(winners.sparkSession, db, UsersTable)(tmp =>
+      winners.write.mode("overwrite").parquet(tmp))
 }

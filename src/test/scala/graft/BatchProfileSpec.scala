@@ -168,7 +168,8 @@ class BatchProfileSpec extends AnyFunSuite {
     // above: outside the sinks only the batch's own passes run (array
     // observation, profile), and a sink pays one write per table plus a
     // misfit pass where a column changes type
-    val (sinkJobs, batchJobs) = seen.partition(_.contains("WarehouseSink.scala"))
+    // the load protocol runs at Warehouse.scala, the parquet writes at WarehouseSink.scala
+    val (sinkJobs, batchJobs) = seen.partition(_.matches("(?s).* at Warehouse(Sink)?\\.scala:.*"))
     assert(batchJobs.size <= 2, listing)
     assert(sinkJobs.size <= 2 * stored.size, listing)
   }

@@ -5,7 +5,7 @@ import java.sql.{Connection, ResultSet, SQLException, Statement}
 
 import scala.collection.mutable
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -272,6 +272,24 @@ class ClickHouseProtocolSpec extends AnyFunSuite {
     assert(create.contains("ENGINE = ReplacingMergeTree()"))
     assert(create.contains("ORDER BY (`message_id`, `table_name`, `column_name`)"))
     assert(st.exists(_.startsWith("INSERT INTO `seg_app`.`misfits` VALUES")))
+  }
+
+  test("users upsert quarantines a trait that no longer fits: misfits DDL + INSERT, still insert-only") {
+    val (fake, wh) = harness()
+    def identities(id: String, user: String, age: Column) =
+      Seq((id, user, "2024-05-01 10:00:00")).toDF("message_id", "user_id", "timestamp")
+        .withColumn("timestamp", to_timestamp(col("timestamp")))
+        .withColumn("traits_age", age)
+    wh.upsertUsers(spark, "seg_app", identities("m1", "u1", lit(5L)))
+    wh.upsertUsers(spark, "seg_app", identities("m2", "u2", lit("twelve")))
+
+    val st = fake.statements.toVector
+    val create = st.find(_.startsWith("CREATE TABLE IF NOT EXISTS `seg_app`.`misfits`")).get
+    assert(create.contains("ORDER BY (`message_id`, `table_name`, `column_name`)"))
+    assert(st.exists(_.startsWith("INSERT INTO `seg_app`.`misfits` VALUES /* 1 rows */")))
+    assert(st.count(_.startsWith("INSERT INTO `seg_app`.`users`")) == 2)
+    assert(st.forall(s => !s.contains("DELETE") && !s.contains("__stage")
+      && !s.contains("DROP") && !s.contains("SELECT")))
   }
 
   test("describe maps ONLY unknown-table errors to None; others propagate") {

@@ -134,6 +134,21 @@ class JdbcWarehouseSpec extends AnyFunSuite {
     assert(users(1).getAs[String]("message_id") == "m2")
   }
 
+  test("users upsert quarantines a trait that no longer fits the users table") {
+    val (wh, _) = freshDb()
+    wh.createDatabase("ns")
+    wh.upsertUsers(spark, "ns", Seq(("m1", "u1", ts("2024-01-01 00:00:01"), 5L))
+      .toDF("message_id", "user_id", "timestamp", "traits_age"))
+    // traits_age is BIGINT now; "twelve" cannot coerce -> misfit, row kept
+    wh.upsertUsers(spark, "ns", Seq(("m2", "u2", ts("2024-01-02 00:00:00"), "twelve"))
+      .toDF("message_id", "user_id", "timestamp", "traits_age"))
+    val mf = wh.read(spark, "ns", "misfits").collect()
+    assert(mf.length == 1)
+    assert(mf.head.getAs[String]("table_name") == "users")
+    assert(mf.head.getAs[String]("column_value") == "twelve")
+    assert(wh.read(spark, "ns", "users").count() == 2)
+  }
+
   test("full pipeline into a JDBC warehouse (multi-sink with parquet)") {
     val (wh, url) = freshDb()
     val src = Files.createTempDirectory("graft_jdbc_src")
@@ -150,7 +165,7 @@ class JdbcWarehouseSpec extends AnyFunSuite {
 
     val job = new SendToWarehouseJob(spark,
       JobConf(warehouseRoots = Seq(pq.toString),
-        jdbcSinks = Seq((url, Map.empty[String, String]))), "JdbcNs")
+        warehouseConfs = Seq(Map("type" -> "jdbc", "url" -> url))), "JdbcNs")
     job.execute(src.toString)
 
     assert(wh.read(spark, "jdbc_ns", "tracks").count() == 2)

@@ -5,9 +5,11 @@ import scala.jdk.CollectionConverters._
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Source guard, no Spark: main code builds its session and releases
-  * retained blocks only through `graft.util.GraftSession`, so Bench, Verify
-  * and the tools cannot drift apart in config again. */
+/** Single-copy source guards, no Spark: main code builds its session and
+  * releases retained blocks only through `graft.util.GraftSession`, so
+  * Bench, Verify and the tools cannot drift apart in config again; and the
+  * warehouse load protocol lives only in `graft.sink.Warehouse`, so the
+  * parquet, JDBC and ClickHouse sinks cannot drift apart in it again. */
 class SessionGuardSpec extends AnyFunSuite {
   private val root = Paths.get("src/main/scala")
   private val factory = Paths.get("graft/util/GraftSession.scala")
@@ -27,5 +29,11 @@ class SessionGuardSpec extends AnyFunSuite {
 
   test("getPersistentRDDs appears only in GraftSession") {
     assert(filesMentioning("getPersistentRDDs") == Seq(factory))
+  }
+
+  test("misfit dedup and the users stream appear only in the Warehouse load protocol") {
+    val protocol = Seq(Paths.get("graft/sink/Warehouse.scala"))
+    assert(filesMentioning("Dedup.dedupMisfits") == protocol)
+    assert(filesMentioning("Dedup.usersFromIdentities") == protocol)
   }
 }

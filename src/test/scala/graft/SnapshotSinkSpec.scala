@@ -512,6 +512,38 @@ class SnapshotSinkSpec extends AnyFunSuite {
     assert(SnapshotSink.readPublished(spark, root).count() == 1)
   }
 
+  test("concurrent committers on one root: every returned commit is its own; a lost rename throws") {
+    val root = tmpRoot()
+    var lost = 0
+    (1 to 5).foreach { round =>
+      val frames = Seq(1L, 2L).map(k => Seq((round * 10L + k, s"t$k")).toDF("k", "v"))
+      val start = new java.util.concurrent.CountDownLatch(1)
+      val results = new java.util.concurrent.ConcurrentLinkedQueue[Either[Throwable, SnapshotSink.Snapshot]]()
+      val threads = frames.map { df =>
+        val t = new Thread(() => {
+          start.await()
+          results.add(try Right(SnapshotSink.commit(df, root)) catch { case e: Throwable => Left(e) })
+          ()
+        })
+        t.start(); t
+      }
+      start.countDown()
+      threads.foreach(_.join())
+      val outcomes = results.toArray.toSeq.map(_.asInstanceOf[Either[Throwable, SnapshotSink.Snapshot]])
+      assert(outcomes.size == 2)
+      outcomes.foreach {
+        case Right(s) => assert(SnapshotSink.snapshot(spark, root, Some(s.version)).files == s.files)
+        case Left(e)  =>
+          assert(e.isInstanceOf[IllegalStateException], e)
+          lost += 1
+      }
+      assert(outcomes.exists(_.isRight))
+    }
+    val committed = SnapshotSink.versions(spark, root)
+    assert(committed == (1 to committed.size))
+    assert(committed.size + lost == 10)
+  }
+
   test("cdc: keyed I/D/U delta between any two versions; unchanged rows omitted") {
     val root = tmpRoot()
     SnapshotSink.commit(Seq((1L, 10L), (2L, 20L), (3L, 30L)).toDF("k", "v"), root)
