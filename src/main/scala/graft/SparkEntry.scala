@@ -382,7 +382,7 @@ object SparkEntry {
       val target = StructType(Seq(
         StructField("message_id", StringType),
         StructField("payload", LongType)))
-      Coerce.coerce(docs, target, "docs_payload", persistIntermediate = false)
+      Coerce.coerce(docs, target, "docs_payload")
         .misfits
         .orderBy("message_id")
     }),

@@ -3,7 +3,6 @@ package graft.etl
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
-import org.apache.spark.storage.StorageLevel
 
 import graft.model.EventSchema
 
@@ -22,20 +21,17 @@ import graft.model.EventSchema
   * loops cell-by-cell in Python. Here the whole operator is ONE projection:
   * per mismatched column we compute `try_cast` once, and a misfit-struct
   * array built from the same expressions is exploded into the side-output.
-  * The intermediate is persisted so main + misfits cost a single scan
-  * (SURVEY §7.3 hard part 3). Everything is codegen'd, narrow, and
-  * distributed — no driver-side loops, no UDFs.
+  * Main and misfits each re-project the input: callers hand in projections
+  * of a batch they have persisted once (SURVEY §7.3 hard part 3), so a
+  * second cache per table would only add cached bytes. Everything is
+  * codegen'd, narrow, and distributed — no driver-side loops, no UDFs.
   */
 object Coerce {
 
-  /** Main output + dead-letter side output. Call `unpersist()` when both
-    * outputs have been consumed. `misfitsPossible` is false when no target
-    * column's type differs from the batch's: no cell can fail its cast, so
-    * `misfits` is empty by construction and callers may skip it. */
-  final case class CoerceResult(main: DataFrame, misfits: DataFrame, intermediate: DataFrame,
-      misfitsPossible: Boolean) {
-    def unpersist(): Unit = { intermediate.unpersist(); () }
-  }
+  /** Main output + dead-letter side output. `misfitsPossible` is false when
+    * no target column's type differs from the batch's: no cell can fail its
+    * cast, so `misfits` is empty by construction and callers may skip it. */
+  final case class CoerceResult(main: DataFrame, misfits: DataFrame, misfitsPossible: Boolean)
 
   private val MisfitArrCol = "__graft_misfits"
 
@@ -85,12 +81,7 @@ object Coerce {
     * try_cast so a genuine overflow becomes a misfit instead of a silent
     * wrap — recorded in the semantics ledger.
     */
-  def coerce(
-      df: DataFrame,
-      target: StructType,
-      tableName: String,
-      persistIntermediate: Boolean = true
-  ): CoerceResult = {
+  def coerce(df: DataFrame, target: StructType, tableName: String): CoerceResult = {
     val actual = df.schema.fields.map(f => f.name -> f.dataType).toMap
 
     val casted: Seq[Column] = target.fields.toIndexedSeq.map { f =>
@@ -130,17 +121,11 @@ object Coerce {
       if (misfitStructs.isEmpty) df.withColumn(MisfitArrCol, array().cast(ArrayType(EventSchema.MisfitSchema)))
       else df.withColumn(MisfitArrCol, filter(array(misfitStructs: _*), x => x.isNotNull))
 
-    // with no misfit struct the main output is the only consumer: nothing
-    // to share, so nothing to persist
-    val inter =
-      if (persistIntermediate && misfitStructs.nonEmpty) withArr.persist(StorageLevel.MEMORY_AND_DISK)
-      else withArr
-
-    val mainClean = inter.select(casted: _*)
-    val misfits = inter
+    val mainClean = withArr.select(casted: _*)
+    val misfits = withArr
       .select(explode(col(MisfitArrCol)).as("m"))
       .select(col("m.*"))
 
-    CoerceResult(mainClean, misfits, inter, misfitsPossible = misfitStructs.nonEmpty)
+    CoerceResult(mainClean, misfits, misfitsPossible = misfitStructs.nonEmpty)
   }
 }

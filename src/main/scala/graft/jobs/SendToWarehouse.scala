@@ -6,7 +6,7 @@ import org.apache.spark.storage.StorageLevel
 import graft.etl.{BatchProfile, ColumnStats, Normalize, TypeSplit}
 import graft.ingest.{JsonFlatten, Readers}
 import graft.model.EventSchema._
-import graft.sink.{TableCatalog, WarehouseSink}
+import graft.sink.TableLoad
 import graft.util.Names
 
 /** Job configuration (reference seghouse/config/configuration.py:22-45):
@@ -31,9 +31,11 @@ final case class JobConf(
   * sequential loop), and the parsed+flattened batch is persisted once. One
   * grouped aggregate over it ([[graft.etl.BatchProfile]]) then decides the
   * whole fan-out on the driver: which tables have rows, which columns are
-  * all-null, each table's refined DDL schema and the event-name list. After
-  * that, each stored table costs only its sink's work: the coerce/misfit
-  * pass where a column's type changes, and one partitioned write.
+  * all-null, each table's refined DDL schema and the event-name list. The
+  * job turns the profile into one [[graft.sink.TableLoad]] per stored table
+  * and hands the whole list to each sink's `load`: the sink ensures and
+  * coerces every table on the driver, writes the batch's misfits once,
+  * and runs the table appends and the users upsert as overlapped branches.
   *
   * Quirks preserved (semantics ledger, SURVEY §7.3): groups and aliases are
   * structure-checked against their own table names but INSERTED INTO
@@ -79,24 +81,24 @@ final class SendToWarehouseJob(
       sinks.foreach(_.createDatabase(schema))
       val byType = TypeSplit.breakDownByType(flat)
 
-      profile.ofType("identify").foreach { stats =>
-        val identities = byType("identify")
-        store(IdentitiesTable, identities, stats)
-        if (stats.nonNull.getOrElse(UserId, 0L) > 0L)
-          sinks.foreach(_.upsertUsers(spark, schema, identities))
-      }
-      profile.ofType("track").foreach(storeTracks(byType("track"), _, profile))
-      profile.ofType("screen").foreach(store(ScreensTable, byType("screen"), _))
-      profile.ofType("page").foreach(store(PagesTable, byType("page"), _))
+      val loads = Seq.newBuilder[TableLoad]
+      profile.ofType("identify").foreach(loads += tableLoad(IdentitiesTable, byType("identify"), _))
+      profile.ofType("track").foreach(loads ++= trackLoads(byType("track"), _, profile))
+      profile.ofType("screen").foreach(loads += tableLoad(ScreensTable, byType("screen"), _))
+      profile.ofType("page").foreach(loads += tableLoad(PagesTable, byType("page"), _))
       // O-35 quirk: the reference ensures the groups/aliases TABLES' own
       // structure (DDL side effect, send_to_warehouse.py:273-296) and then
       // inserts the rows into identities — so the warehouse ends up with
       // (possibly empty) groups/aliases tables evolved to the batch schema,
       // AND the rows in identities.
       profile.ofType("group").foreach(
-        store(IdentitiesTable, byType("group"), _, structureTable = Some(GroupsTable)))
+        loads += tableLoad(IdentitiesTable, byType("group"), _, structureTable = Some(GroupsTable)))
       profile.ofType("alias").foreach(
-        store(IdentitiesTable, byType("alias"), _, structureTable = Some(AliasesTable)))
+        loads += tableLoad(IdentitiesTable, byType("alias"), _, structureTable = Some(AliasesTable)))
+      val users = profile.ofType("identify")
+        .filter(_.nonNull.getOrElse(UserId, 0L) > 0L).map(_ => byType("identify"))
+      val tables = loads.result()
+      sinks.foreach(_.load(spark, schema, tables, users))
     } finally { flat.unpersist(); () }
   }
 
@@ -113,31 +115,27 @@ final class SendToWarehouseJob(
     Normalize.withUnixMillis(withExtra)
   }
 
-  /** Stores one non-empty table. §1.2: columns entirely null in this table
+  /** One non-empty table's load. §1.2: columns entirely null in this table
     * do not take part in its DDL; the reference's first-non-null inference
     * (dataframe_util.py:43-51) types the new columns, then the authoritative
     * table schema wins at insert time and non-conforming cells become
     * misfits (O-19). Both come from the batch profile, not from a scan. */
-  private def store(table: String, df: DataFrame, stats: ColumnStats,
-      structureTable: Option[String] = None): Unit = {
-    val pruned  = df.drop(stats.deadColumns(df.schema): _*)
-    val refined = stats.refinedSchema(pruned.schema)
-    // O-35: DDL side effect on the batch's own table (groups/aliases)
-    structureTable.foreach(st => sinks.foreach(_.ensureTableStructure(schema, st, refined)))
-    sinks.foreach(_.insertDf(spark, schema, table, pruned, ddlSchema = Some(refined)))
+  private def tableLoad(table: String, df: DataFrame, stats: ColumnStats,
+      structureTable: Option[String] = None): TableLoad = {
+    val pruned = df.drop(stats.deadColumns(df.schema): _*)
+    TableLoad(table, pruned, Some(stats.refinedSchema(pruned.schema)), structureTable)
   }
 
-  private def storeTracks(tracksRaw: DataFrame, stats: ColumnStats, profile: BatchProfile): Unit = {
-    if (!tracksRaw.columns.contains(EventCol)) { store(TracksTable, tracksRaw, stats); return }
+  private def trackLoads(tracksRaw: DataFrame, stats: ColumnStats, profile: BatchProfile): Seq[TableLoad] = {
+    if (!tracksRaw.columns.contains(EventCol)) return Seq(tableLoad(TracksTable, tracksRaw, stats))
     val tracks = Normalize.normalizeEventName(tracksRaw)
     // shared tracks table takes the allowlist+prefix projection (O-7)
-    store(TracksTable,
-      Normalize.selectTracksColumns(tracks, conf.extraTimestamps.keys.toSeq), stats)
-    // O-33: per-event-name fan-out; reserved-name collision -> esc_ prefix
-    profile.eventNames.foreach { e =>
-      val tableName = if (DefaultTables.contains(e)) s"esc_$e" else e
-      profile.ofEvent(e).foreach(store(tableName, TypeSplit.filterEvent(tracks, e), _))
-    }
+    tableLoad(TracksTable, Normalize.selectTracksColumns(tracks, conf.extraTimestamps.keys.toSeq), stats) +:
+      // O-33: per-event-name fan-out; reserved-name collision -> esc_ prefix
+      profile.eventNames.flatMap { e =>
+        val tableName = if (DefaultTables.contains(e)) s"esc_$e" else e
+        profile.ofEvent(e).map(tableLoad(tableName, TypeSplit.filterEvent(tracks, e), _))
+      }
   }
 }
 

@@ -150,8 +150,11 @@ final class TableCatalog(val root: String) {
     }
   }
 
-  /** Read a table back; `mergeSchema` covers parts written before the last
-    * evolution (older files simply lack the newer columns -> NULL).
+  /** Read a table back under its authoritative schema: parts written
+    * before the last evolution simply lack the newer columns -> NULL, and
+    * no job merges the parts' footers. Partition directories (event_date)
+    * are still discovered and appended. A table without a catalog schema
+    * falls back to merging the footers.
     * (Companion-held evolution locks live in [[TableCatalog$]].) */
   def read(spark: SparkSession, db: String, t: String): DataFrame = {
     val p       = new Path(tablePath(db, t))
@@ -160,11 +163,13 @@ final class TableCatalog(val root: String) {
       name.endsWith(".parquet") ||
         (st.isDirectory && !name.startsWith("_") && !name.startsWith("."))
     }
-    if (!hasData) {
-      val schema = describe(db, t).getOrElse(new StructType())
-      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-    } else {
-      spark.read.option("mergeSchema", "true").parquet(tablePath(db, t))
+    val schema = describe(db, t)
+    if (!hasData)
+      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
+        schema.getOrElse(new StructType()))
+    else schema match {
+      case Some(s) => spark.read.schema(s).parquet(tablePath(db, t))
+      case None    => spark.read.option("mergeSchema", "true").parquet(tablePath(db, t))
     }
   }
 }

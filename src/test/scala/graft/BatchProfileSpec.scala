@@ -2,6 +2,7 @@ package graft
 
 import java.nio.file.{Files, Path}
 import java.nio.charset.StandardCharsets
+import scala.jdk.CollectionConverters._
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, Row}
@@ -13,6 +14,7 @@ import graft.etl.{BatchProfile, ColumnStats, Normalize, TypeInference, TypeSplit
 import graft.jobs.{JobConf, SendToWarehouseJob}
 import graft.model.EventSchema._
 import graft.sink.{TableCatalog, WarehouseSink}
+import graft.util.Names
 
 /** The load job takes every store decision from one grouped aggregate
   * (`BatchProfile`). These specs hold it to the per-table computations it
@@ -118,17 +120,18 @@ class BatchProfileSpec extends AnyFunSuite {
     assert(Option(wh.toFile.listFiles).forall(_.isEmpty))
   }
 
-  test("a batch costs at most 2 + 3 jobs per stored table") {
-    def track(id: String, event: String, qty: String) = line(
-      s""""messageId":"$id","userId":"u-$id","type":"track","event":"$event","properties":{"qty":"$qty"}""")
-    val lines = Seq(
-      track("t1", "Alpha", "1"), track("t2", "Alpha", "2"), track("t3", "Beta", "3"),
-      track("t4", "Beta", "four"), track("t5", "Gamma", "5"),
-      line(""""messageId":"i1","userId":"u1","type":"identify","traits":{"plan":"pro"}"""))
+  private def track(id: String, event: String, qty: String) = line(
+    s""""messageId":"$id","userId":"u-$id","type":"track","event":"$event","properties":{"qty":"$qty"}""")
+
+  /** Runs `lines` as one batch with adaptive execution off, as in a
+    * streaming micro-batch, where Structured Streaming turns it off and one
+    * query is one job. Returns the stored tables, each job's stage names
+    * and the warehouse root. */
+  private def processCountingJobs(lines: Seq[String], namespace: String): (Seq[String], Seq[String], Path) = {
     val raw = spark.read.json(writeDir(lines).toString).persist()
     raw.count()
     val wh = Files.createTempDirectory("graft_profile_jobs")
-    val job = new SendToWarehouseJob(spark, JobConf(warehouseRoots = Seq(wh.toString)), "Jobs")
+    val job = new SendToWarehouseJob(spark, JobConf(warehouseRoots = Seq(wh.toString)), namespace)
 
     val group = "batch-profile-spec-" + System.nanoTime()
     val jobs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
@@ -139,8 +142,6 @@ class BatchProfileSpec extends AnyFunSuite {
     }
     val sc = spark.sparkContext
     sc.addSparkListener(listener)
-    // as in a streaming micro-batch, where Structured Streaming turns
-    // adaptive execution off and one query is one job
     val aqe = spark.conf.get("spark.sql.adaptive.enabled")
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     try {
@@ -155,23 +156,60 @@ class BatchProfileSpec extends AnyFunSuite {
       raw.unpersist()
     }
 
-    val db = wh.resolve("jobs").toFile
+    val db = wh.resolve(Names.decamelize(namespace)).toFile
     val stored = db.listFiles.filter(_.isDirectory).filter { t =>
       Files.walk(t.toPath).anyMatch(_.toString.endsWith(".parquet"))
     }.map(_.getName).sorted.toSeq
-    assert(stored == Seq("alpha", "beta", "gamma", "identities", "misfits", "tracks", "users"))
-    val seen = jobs.toArray.toSeq.map(_.toString)
+    (stored, jobs.toArray.toSeq.map(_.toString), db.toPath)
+  }
+
+  /** The bounds every batch keeps: at most 2 + 3 jobs per stored table in
+    * all, and tighter, so that one probe per table cannot hide under that
+    * bound: outside the sinks only the batch's own passes run (array
+    * observation, profile), and a sink pays one write per table plus the
+    * batch's one misfit pass. The load protocol runs at Warehouse.scala,
+    * the parquet writes at WarehouseSink.scala. */
+  private def assertJobBounds(stored: Seq[String], seen: Seq[String]): Unit = {
     val listing = s"${seen.size} jobs for ${stored.size} tables:\n${seen.mkString("\n")}"
     assert(seen.nonEmpty)
     assert(seen.size <= 2 + 3 * stored.size, listing)
-    // tighter, so that one probe per table cannot hide under the bound
-    // above: outside the sinks only the batch's own passes run (array
-    // observation, profile), and a sink pays one write per table plus a
-    // misfit pass where a column changes type
-    // the load protocol runs at Warehouse.scala, the parquet writes at WarehouseSink.scala
     val (sinkJobs, batchJobs) = seen.partition(_.matches("(?s).* at Warehouse(Sink)?\\.scala:.*"))
     assert(batchJobs.size <= 2, listing)
     assert(sinkJobs.size <= 2 * stored.size, listing)
+  }
+
+  test("a batch costs at most 2 + 3 jobs per stored table") {
+    val lines = Seq(
+      track("t1", "Alpha", "1"), track("t2", "Alpha", "2"), track("t3", "Beta", "3"),
+      track("t4", "Beta", "four"), track("t5", "Gamma", "5"),
+      line(""""messageId":"i1","userId":"u1","type":"identify","traits":{"plan":"pro"}"""))
+    val (stored, seen, _) = processCountingJobs(lines, "Jobs")
+    assert(stored == Seq("alpha", "beta", "gamma", "identities", "misfits", "tracks", "users"))
+    assertJobBounds(stored, seen)
+  }
+
+  test("a batch whose every event table drifts writes its misfits with one count and one write job") {
+    val lines = Seq(
+      track("t1", "Alpha", "1"), track("t2", "Alpha", "two"), track("t3", "Beta", "3"),
+      track("t4", "Beta", "four"), track("t5", "Gamma", "5"), track("t6", "Gamma", "six"),
+      line(""""messageId":"i1","userId":"u1","type":"identify","traits":{"plan":"pro"}"""))
+    val (stored, seen, db) = processCountingJobs(lines, "Drift")
+    assert(stored == Seq("alpha", "beta", "gamma", "identities", "misfits", "tracks", "users"))
+    assertJobBounds(stored, seen)
+    val misfits = new TableCatalog(db.getParent.toString).read(spark, "drift", MisfitsTable)
+    // each drifted cell is quarantined for its event table (the shared
+    // tracks table does not carry properties)
+    assert(misfits.groupBy("table_name").count().collect().map(r => r.getString(0) -> r.getLong(1)).toMap ==
+      Map("alpha" -> 1L, "beta" -> 1L, "gamma" -> 1L))
+    // one dedup/count job for the whole batch's misfits (the write job
+    // lists the count's shuffle stage too, as skipped)...
+    assert(seen.count(_.split('+').forall(_.startsWith("count at Warehouse.scala:"))) <= 1,
+      seen.mkString("\n"))
+    // ...and one write job: a write job's files share its job id
+    val files = Files.list(db.resolve(MisfitsTable)).iterator().asScala.map(_.getFileName.toString)
+      .filter(_.endsWith(".parquet")).toSeq
+    assert(files.nonEmpty)
+    assert(files.map(_.split("-").slice(2, 7).mkString("-")).distinct.size == 1, files.mkString("\n"))
   }
 
   test("sink contract: an empty frame appends no rows but ensures the table's structure") {

@@ -21,7 +21,7 @@ class CoerceSpec extends AnyFunSuite {
       ("m2", "twelve"),  // misfit
       ("m3", null: String) // null passes through, no misfit
     ).toDF("message_id", "n")
-    val r = Coerce.coerce(df, target, "tbl", persistIntermediate = false)
+    val r = Coerce.coerce(df, target, "tbl")
     val main = r.main.orderBy("message_id").collect()
     assert(main.map(_.getAs[Any]("n")).toSeq == Seq(12L, null, null))
     assert(main.forall(_.isNullAt(2))) // missing column added as null
@@ -39,7 +39,7 @@ class CoerceSpec extends AnyFunSuite {
   test("conservation: misfit count equals cells nulled by coercion") {
     val df = Seq(("a", "1"), ("b", "x"), ("c", "2"), ("d", "y"), ("e", "z"))
       .toDF("message_id", "n")
-    val r = Coerce.coerce(df, target, "tbl", persistIntermediate = false)
+    val r = Coerce.coerce(df, target, "tbl")
     val nulled = r.main.filter(col("n").isNull).count()
     assert(r.misfits.count() == nulled)
     assert(nulled == 3)
@@ -47,18 +47,18 @@ class CoerceSpec extends AnyFunSuite {
 
   test("within-family numeric mismatch passes through") {
     val df = Seq(("a", 1), ("b", 2)).toDF("message_id", "n") // int32 -> int64
-    val r = Coerce.coerce(df, target, "tbl", persistIntermediate = false)
+    val r = Coerce.coerce(df, target, "tbl")
     assert(r.misfits.isEmpty)
     assert(r.main.schema("n").dataType == LongType)
   }
 
   test("misfitsPossible: false only when no present column changes type") {
     val same = Seq(("a", 1L)).toDF("message_id", "n")
-    val r = Coerce.coerce(same, target, "tbl", persistIntermediate = false)
+    val r = Coerce.coerce(same, target, "tbl")
     assert(!r.misfitsPossible) // `extra` is missing, not mismatched
     assert(r.misfits.isEmpty)
     val changed = Seq(("a", "1")).toDF("message_id", "n")
-    assert(Coerce.coerce(changed, target, "tbl", persistIntermediate = false).misfitsPossible)
+    assert(Coerce.coerce(changed, target, "tbl").misfitsPossible)
   }
 
   test("addMissingColumns aligns to target with typed nulls") {

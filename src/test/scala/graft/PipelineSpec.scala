@@ -2,6 +2,7 @@ package graft
 
 import java.nio.file.{Files, Path}
 import java.nio.charset.StandardCharsets
+import scala.jdk.CollectionConverters._
 
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -153,6 +154,27 @@ class PipelineSpec extends AnyFunSuite {
         .anyMatch(p => p.getFileName.toString.startsWith("event_date=")))
     // compacting an already-clean table removes nothing
     assert(sink.compact(spark, "my_app", "tracks") == 0L)
+  }
+
+  test("identify, group and alias rows of one batch all reach identities, with no _temporary left") {
+    val src = Files.createTempDirectory("graft_src_ident")
+    val wh  = Files.createTempDirectory("graft_wh_ident")
+    val identifies = (1 to 3).map(i => envelope(s"i-$i", "identify", s"u-$i",
+      s"2024-01-01T00:0$i:00.000Z", s""","traits":{"email":"u$i@x.y"}"""))
+    val groups = (1 to 2).map(i => envelope(s"g-$i", "group", s"u-$i",
+      s"2024-01-01T00:1$i:00.000Z", s""","groupId":"g-$i","traits":{"org":"o$i"}"""))
+    val aliases = (1 to 2).map(i => envelope(s"a-$i", "alias", s"u-$i",
+      s"2024-01-01T00:2$i:00.000Z", s""","previousId":"old-$i""""))
+    writeFixture(src, "b.json", identifies ++ groups ++ aliases)
+    new SendToWarehouseJob(spark, JobConf(warehouseRoots = Seq(wh.toString)), "ns").execute(src.toString)
+
+    val ids = new TableCatalog(wh.toString).read(spark, "ns", "identities")
+    assert(ids.count() == identifies.size + groups.size + aliases.size)
+    assert(ids.select("message_id").collect().map(_.getString(0)).toSet ==
+      (Seq("i-1", "i-2", "i-3", "g-1", "g-2", "a-1", "a-2")).toSet)
+    val walk = Files.walk(wh)
+    try assert(!walk.iterator().asScala.exists(_.getFileName.toString == "_temporary"))
+    finally walk.close()
   }
 
   test("catalog works against a scheme-qualified file:/// URI root (Hadoop FS path)") {

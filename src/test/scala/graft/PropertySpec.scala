@@ -49,7 +49,7 @@ class PropertySpec extends AnyFunSuite {
     val df = rows.toDF("message_id", "payload")
     val target = StructType(Seq(
       StructField("message_id", StringType), StructField("payload", LongType)))
-    val r = Coerce.coerce(df, target, "t", persistIntermediate = false)
+    val r = Coerce.coerce(df, target, "t")
     val expectedMisfits = rows.count { case (_, v) =>
       v != null && scala.util.Try(v.toLong).isFailure
     }

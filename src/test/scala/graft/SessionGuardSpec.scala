@@ -9,7 +9,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * releases retained blocks only through `graft.util.GraftSession`, so
   * Bench, Verify and the tools cannot drift apart in config again; and the
   * warehouse load protocol lives only in `graft.sink.Warehouse`, so the
-  * parquet, JDBC and ClickHouse sinks cannot drift apart in it again. */
+  * parquet, JDBC and ClickHouse sinks cannot drift apart in it again; and
+  * driver threads come only from `graft.util.Par`'s bounded pool. */
 class SessionGuardSpec extends AnyFunSuite {
   private val root = Paths.get("src/main/scala")
   private val factory = Paths.get("graft/util/GraftSession.scala")
@@ -29,6 +30,10 @@ class SessionGuardSpec extends AnyFunSuite {
 
   test("getPersistentRDDs appears only in GraftSession") {
     assert(filesMentioning("getPersistentRDDs") == Seq(factory))
+  }
+
+  test("thread pools are made only in Par, whose pool is bounded") {
+    assert(filesMentioning("Executors.new") == Seq(Paths.get("graft/util/Par.scala")))
   }
 
   test("misfit dedup and the users stream appear only in the Warehouse load protocol") {
