@@ -54,80 +54,43 @@ object SnapshotSink {
       .map(_.asInstanceOf[Long]).getOrElse(0L)
 
   /** Committed versions, ascending (fully-renamed manifests only). */
-  def versions(spark: SparkSession, root: String): Seq[Int] = {
-    val dir = manifestDir(root)
+  def versions(spark: SparkSession, root: String): Seq[Int] =
+    numbered(spark, manifestDir(root), "v")
+
+  /** The numbers `N` of the fully-renamed `<prefix>N.json` files in `dir`,
+    * ascending — committed manifests or publish pointers; temp files never
+    * match. */
+  private def numbered(spark: SparkSession, dir: Path, prefix: String): Seq[Int] = {
     val f = fs(spark, dir)
+    val name = (prefix + "(\\d+)\\.json").r
     if (!f.exists(dir)) Seq.empty
     else f.listStatus(dir).toSeq.map(_.getPath.getName)
-      .collect { case s if s.matches("v\\d+\\.json") =>
-        s.stripPrefix("v").stripSuffix(".json").toInt }
+      .collect { case name(n) => n.toInt }
       .sorted
   }
 
-  /** Write `df`'s data files into a fresh data subdir — NO manifest yet,
-    * so nothing is visible to readers. Returns the file list. */
-  private def writeFiles(df: DataFrame, root: String): Seq[String] = {
-    val spark = df.sparkSession
-    val token = java.util.UUID.randomUUID().toString.take(12)
-    val dataPath = new Path(new Path(root, "data"), token)
-    df.write.parquet(dataPath.toString)
-    val f = fs(spark, dataPath)
-    f.listStatus(dataPath).toSeq.map(_.getPath)
-      .filter(_.getName.endsWith(".parquet")).map(_.toString).sorted
+  /** A small commit file's contents (a manifest or a publish pointer). */
+  private def readSmall(spark: SparkSession, p: Path): String = {
+    val in = fs(spark, p).open(p)
+    try new String(org.apache.commons.io.IOUtils.toByteArray(in),
+      java.nio.charset.StandardCharsets.UTF_8)
+    finally in.close()
   }
 
-  /** Write `df`'s data files into a fresh data subdir — NO manifest yet,
-    * so nothing is visible to readers. Returns (files, rows). */
-  private def writeData(df: DataFrame, root: String): (Seq[String], Long) = {
-    val spark = df.sparkSession
-    val files = writeFiles(df, root)
-    // Exact row count from parquet footer METADATA. For small commits the
-    // footers are read on the driver (r16 optimization: the previous
-    // `spark.read.parquet(files).count()` was already footer-only but
-    // still planned and scheduled one Spark job per commit — pure
-    // scheduler latency for state-sized snapshots, ~40 commit sites across
-    // the query surface). A commit with many files keeps the DISTRIBUTED
-    // footer count: driver-serial footer I/O is O(files) and the driver
-    // should not do data-proportional work (guide §5).
-    val rows =
-      if (files.isEmpty) 0L
-      else if (files.size <= 64) {
-        val conf = spark.sessionState.newHadoopConf()
-        files.map { p =>
-          val in = org.apache.parquet.hadoop.util.HadoopInputFile
-            .fromPath(new Path(p), conf)
-          val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-          try r.getRecordCount finally r.close()
-        }.sum
-      } else spark.read.parquet(files: _*).count()
-    (files, rows)
-  }
-
-  /** Rename-commit a manifest for `version` over `files`. */
-  private def writeManifest(
-      spark: SparkSession, root: String, version: Int,
-      files: Seq[String], rows: Long): Snapshot = {
-    val mdir = manifestDir(root)
-    val f = fs(spark, mdir)
-    f.mkdirs(mdir)
-    val tmp = uniqueTmp(mdir, s"v$version")
-    val fin = new Path(mdir, s"v$version.json")
-    val json = {
-      def q(s: String) = "\"" + s.replace("\\", "\\\\").replace("\"", "\\\"") + "\""
-      s"""{"version":$version,"rows":$rows,"files":[${files.map(q).mkString(",")}]}"""
-    }
+  /** Write `body` to this committer's own temp file, then rename-commit it
+    * as `dir/<name>.json`. Two committers that picked the same name never
+    * write or rename each other's temp file; the `.json.tmp` ending is what
+    * [[vacuum]] sweeps, and [[numbered]]'s listing never sees it. */
+  private def writeNoClobber(
+      spark: SparkSession, dir: Path, name: String, body: String, what: String): Unit = {
+    val f = fs(spark, dir)
+    f.mkdirs(dir)
+    val tmp = new Path(dir, s"$name.${java.util.UUID.randomUUID()}.json.tmp")
     val out = f.create(tmp, true)
-    try out.write(json.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    try out.write(body.getBytes(java.nio.charset.StandardCharsets.UTF_8))
     finally out.close()
-    renameOrThrow(f, tmp, fin, "snapshot commit")
-    Snapshot(version, files, rows)
+    renameOrThrow(f, tmp, new Path(dir, s"$name.json"), what)
   }
-
-  /** Each committer's own temp file, so two committers that picked the same
-    * N never write or rename each other's. The `.json.tmp` ending is what
-    * [[vacuum]] sweeps; the `v\d+\.json` listing filter never sees it. */
-  private def uniqueTmp(dir: Path, name: String): Path =
-    new Path(dir, s"$name.${java.util.UUID.randomUUID()}.json.tmp")
 
   /** Rename-commit `tmp` as `fin`, never over an existing file: the
     * committer that loses the race for `fin` throws. The explicit check
@@ -143,14 +106,142 @@ object SnapshotSink {
     }
   }
 
+  /** Write `df`'s data files into a fresh data subdir — NO manifest yet,
+    * so nothing is visible to readers. Returns the file list. */
+  private def writeFiles(df: DataFrame, root: String): Seq[String] = {
+    val spark = df.sparkSession
+    val token = java.util.UUID.randomUUID().toString.take(12)
+    val dataPath = new Path(new Path(root, "data"), token)
+    df.write.parquet(dataPath.toString)
+    val f = fs(spark, dataPath)
+    f.listStatus(dataPath).toSeq.map(_.getPath)
+      .filter(_.getName.endsWith(".parquet")).map(_.toString).sorted
+  }
+
+  /** A set index's build parameters: the keys column, the expected
+    * distinct keys per file and the false-positive rate. */
+  private type SetKeys = (org.apache.spark.sql.Column, Long, Double)
+
+  /** THE COMMIT PATH every write takes. The new version lists `carried`
+    * (files of `prior`, kept verbatim) plus `newFiles` (just written,
+    * still invisible); `prior = None` starts the lineage afresh as the
+    * next free version. One rule derives what the version records:
+    *
+    *  - Sidecars. A sidecar row is a per-file fact, so the new version's
+    *    sidecar is the prior's rows for the carried files ∪ fresh rows for
+    *    the new files. A lineage keeps the sidecars it was first committed
+    *    with: an op on a prior version must pass exactly that version's
+    *    index parameters (its `statsCols` and `sumCols` when it carries a
+    *    zone map, `setKeys` when it carries a set index, neither when it
+    *    does not), or it is refused before anything is committed.
+    *  - Row count. Prior rows + the new files' footer count when every
+    *    prior file is carried and the footers answer (≤ 64 files, no Spark
+    *    job); otherwise the new sidecar's total; otherwise a count.
+    *
+    * The sidecars are written BEFORE the manifest rename, so an
+    * unreferenced sidecar from a crashed commit is invisible (readers
+    * resolve sidecars through the committed version number) and is swept
+    * by [[vacuum]] after the orphan grace. */
+  private def commitVersion(
+      spark: SparkSession, root: String, prior: Option[Snapshot],
+      carried: Seq[String], newFiles: Seq[String],
+      statsCols: Seq[String], sumCols: Seq[String],
+      setKeys: Option[SetKeys]): Snapshot = {
+    val version = prior.fold(versions(spark, root).lastOption.getOrElse(0))(_.version) + 1
+    val priorStats = prior.map(p => statsDir(root, p.version)).filter(d => fs(spark, d).exists(d))
+    val priorSet = prior.map(p => setIndexDir(root, p.version)).filter(d => fs(spark, d).exists(d))
+    prior.foreach { p =>
+      require(priorStats.isEmpty || statsCols.nonEmpty,
+        "lineage carries a zone-map sidecar — pass its statsCols (and " +
+          "sumCols) so this op can extend it")
+      require(priorStats.nonEmpty || statsCols.isEmpty,
+        s"prior snapshot v${p.version} has no zone-map sidecar to extend " +
+          "(committed without stats — use commitWithStats/commitIndexed)")
+      require(priorSet.isEmpty || setKeys.nonEmpty,
+        "lineage carries a set index — pass setKeys (keys column, " +
+          "expectedPerFile, fpp) so this op can extend it")
+      require(priorSet.nonEmpty || setKeys.isEmpty,
+        s"prior snapshot v${p.version} has no set index to extend " +
+          "(committed without one — use commitWithSetIndex/commitIndexed)")
+    }
+    val allCarried = prior.forall(_.files.size == carried.size)
+    // the prior's sidecar rows for the carried files
+    def carriedRows(dir: Path): DataFrame = {
+      val side = spark.read.parquet(dir.toString)
+      if (allCarried) side
+      else {
+        val keep = carried.map(canon)
+        side.filter(udf((f: String) => canon(f)).apply(col("file")).isin(keep: _*))
+      }
+    }
+    val freshStats =
+      if (statsCols.isEmpty || newFiles.isEmpty) None
+      else Some(fileStats(spark, newFiles, statsCols, sumCols))
+    val stats = if (statsCols.isEmpty) None else {
+      val prev = priorStats.map { d =>
+        val rows = carriedRows(d)
+        // an extension must keep the lineage's statsCols/sumCols, or a
+        // sum-carrying lineage silently becomes unappendable
+        val want = statsColumns(statsCols, sumCols)
+        require(rows.columns.toSet == want,
+          s"stats sidecar schema mismatch: prior has " +
+            s"[${rows.columns.sorted.mkString(",")}], this op computes " +
+            s"[${want.toSeq.sorted.mkString(",")}] — pass the lineage's " +
+            "original statsCols and sumCols")
+        rows
+      }
+      (prev ++ freshStats.map(_._1)).reduceOption(_ unionByName _)
+    }
+    val index = setKeys.flatMap { case (keys, expectedPerFile, fpp) =>
+      val fresh =
+        if (newFiles.isEmpty) None
+        else Some(computeSetIndex(spark, newFiles, keys, expectedPerFile, fpp))
+      (priorSet.map(carriedRows) ++ fresh).reduceOption(_ unionByName _)
+    }
+    val sidecars = (stats.map(_ -> statsDir(root, version)).toSeq ++
+      index.map(_ -> setIndexDir(root, version))).map { case (d, p) => (d.coalesce(1), p) }
+    val priorRows = prior.fold(0L)(_.rows)
+    val footerRows =
+      if (!allCarried) None
+      else if (newFiles.isEmpty) Some(priorRows)
+      else freshStats.flatMap(_._2).orElse(footerFileStats(spark, newFiles, Nil).map(_._2))
+        .map(priorRows + _)
+    val (rows, toWrite) = footerRows match {
+      case Some(n) => (n, sidecars)
+      case None => sidecars match {
+        case (first, p) +: rest =>
+          val cp = first.localCheckpoint(true)
+          (totalRows(cp), (cp, p) +: rest)
+        case _ =>
+          (if (allCarried) priorRows + parquetRows(spark, newFiles)
+            else parquetRows(spark, carried ++ newFiles), Nil)
+      }
+    }
+    toWrite.foreach { case (d, p) => d.write.mode("overwrite").parquet(p.toString) }
+    val all = (carried ++ newFiles).sorted
+    val json = {
+      def q(s: String) = "\"" + s.replace("\\", "\\\\").replace("\"", "\\\"") + "\""
+      s"""{"version":$version,"rows":$rows,"files":[${all.map(q).mkString(",")}]}"""
+    }
+    writeNoClobber(spark, manifestDir(root), s"v$version", json, "snapshot commit")
+    Snapshot(version, all, rows)
+  }
+
+  /** Exact row count of parquet `files` from their footers: on the driver
+    * up to 64 files (no Spark job — driver-serial footer I/O stays
+    * bounded), a distributed footer-only count above. */
+  private[sink] def parquetRows(spark: SparkSession, files: Seq[String]): Long =
+    if (files.isEmpty) 0L
+    else footerFileStats(spark, files, Nil).fold(spark.read.parquet(files: _*).count())(_._2)
+
+  /** The latest committed snapshot, if any. */
+  private def latest(spark: SparkSession, root: String): Option[Snapshot] =
+    versions(spark, root).lastOption.map(readManifest(spark, root, _))
+
   /** Write `df` as the next snapshot version and commit it atomically.
     * Returns the committed snapshot descriptor. */
-  def commit(df: DataFrame, root: String): Snapshot = {
-    val spark = df.sparkSession
-    val (files, rows) = writeData(df, root)
-    val version = versions(spark, root).lastOption.getOrElse(0) + 1
-    writeManifest(spark, root, version, files, rows)
-  }
+  def commit(df: DataFrame, root: String): Snapshot =
+    commitVersion(df.sparkSession, root, None, Nil, writeFiles(df, root), Nil, Nil, None)
 
   /** APPEND `df` as the next snapshot version WITHOUT rewriting existing
     * data: the batch lands in a fresh data subdir and the new manifest
@@ -159,33 +250,24 @@ object SnapshotSink {
     * O(table) rewrite a read-union-recommit costs. This is how a
     * corpus-sized table (e.g. an ANN signature index, q143) grows
     * incrementally; state-sized tables can afford either. Readers of
-    * prior versions are untouched (their file lists never change). */
+    * prior versions are untouched (their file lists never change). A
+    * lineage that carries sidecars is refused: extend it with
+    * [[appendIndexed]]. */
   def append(df: DataFrame, root: String): Snapshot = {
     val spark = df.sparkSession
-    val prior = versions(spark, root).lastOption
-      .map(v => snapshot(spark, root, Some(v)))
+    val prior = latest(spark, root)
     // batch data lands invisibly first; the ONE manifest rename then
-    // publishes prior files + batch files together — same atomicity as
-    // commit, O(batch) write I/O
-    val (files, rows) = writeData(df, root)
-    val all = (prior.map(_.files).getOrElse(Seq.empty) ++ files).sorted
-    val total = prior.map(_.rows).getOrElse(0L) + rows
-    val version = prior.map(_.version).getOrElse(0) + 1
-    writeManifest(spark, root, version, all, total)
+    // publishes prior files + batch files together
+    commitVersion(spark, root, prior, prior.fold(Seq.empty[String])(_.files),
+      writeFiles(df, root), Nil, Nil, None)
   }
 
   /** Read `v`'s manifest directly — the caller vouches `v` is committed
     * (no directory re-listing; [[history]] reads V manifests off ONE
     * listing instead of V+1). */
   private def readManifest(spark: SparkSession, root: String, v: Int): Snapshot = {
-    val p = new Path(manifestDir(root), s"v$v.json")
-    val f = fs(spark, p)
-    val in = f.open(p)
-    val json =
-      try new String(org.apache.commons.io.IOUtils.toByteArray(in),
-        java.nio.charset.StandardCharsets.UTF_8)
-      finally in.close()
-    // manifest fields are machine-written (see commit) — parse positionally
+    val json = readSmall(spark, new Path(manifestDir(root), s"v$v.json"))
+    // manifest fields are machine-written (see commitVersion) — parse positionally
     val rows = """"rows":(\d+)""".r.findFirstMatchIn(json).get.group(1).toLong
     Snapshot(v, parseFilesArray(json), rows)
   }
@@ -251,16 +333,6 @@ object SnapshotSink {
 
   private def publishDir(root: String) = new Path(root, "_published")
 
-  private def publishSeqs(spark: SparkSession, root: String): Seq[Int] = {
-    val dir = publishDir(root)
-    val f = fs(spark, dir)
-    if (!f.exists(dir)) Seq.empty
-    else f.listStatus(dir).toSeq.map(_.getPath.getName)
-      .collect { case s if s.matches("p\\d+\\.json") =>
-        s.stripPrefix("p").stripSuffix(".json").toInt }
-      .sorted
-  }
-
   /** WRITE–AUDIT–PUBLISH promotion: mark a COMMITTED version as the one
     * published readers see. Commits are the WRITE, the caller's checks
     * between commit and this call are the AUDIT, and this pointer is
@@ -273,32 +345,18 @@ object SnapshotSink {
   def publish(spark: SparkSession, root: String, version: Int): Unit = {
     require(versions(spark, root).contains(version),
       s"cannot publish uncommitted version $version")
-    val pdir = publishDir(root)
-    val f = fs(spark, pdir)
-    f.mkdirs(pdir)
-    val seq = publishSeqs(spark, root).lastOption.getOrElse(0) + 1
-    val tmp = uniqueTmp(pdir, s"p$seq")
-    val fin = new Path(pdir, s"p$seq.json")
-    val out = f.create(tmp, true)
-    try out.write(s"""{"seq":$seq,"version":$version}"""
-      .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
-    renameOrThrow(f, tmp, fin, "publish")
+    val seq = numbered(spark, publishDir(root), "p").lastOption.getOrElse(0) + 1
+    writeNoClobber(spark, publishDir(root), s"p$seq",
+      s"""{"seq":$seq,"version":$version}""", "publish")
   }
 
   /** The currently published version (highest-sequence pointer), or
     * None when nothing has been published yet. */
-  def publishedVersion(spark: SparkSession, root: String): Option[Int] = {
-    publishSeqs(spark, root).lastOption.map { seq =>
-      val p = new Path(publishDir(root), s"p$seq.json")
-      val in = fs(spark, p).open(p)
-      val json =
-        try new String(org.apache.commons.io.IOUtils.toByteArray(in),
-          java.nio.charset.StandardCharsets.UTF_8)
-        finally in.close()
+  def publishedVersion(spark: SparkSession, root: String): Option[Int] =
+    numbered(spark, publishDir(root), "p").lastOption.map { seq =>
+      val json = readSmall(spark, new Path(publishDir(root), s"p$seq.json"))
       """"version":(\d+)""".r.findFirstMatchIn(json).get.group(1).toInt
     }
-  }
 
   /** Read through the published pointer — what a downstream consumer
     * sees; staged (committed-but-unpublished) versions are invisible. */
@@ -344,10 +402,14 @@ object SnapshotSink {
 
   /** Read a committed snapshot BY ITS MANIFEST — orphan files in the
     * data directories are invisible by construction. */
-  def read(spark: SparkSession, root: String, version: Option[Int] = None): DataFrame = {
+  def read(spark: SparkSession, root: String, version: Option[Int] = None): DataFrame =
+    spark.read.parquet(filled(spark, root, version).files: _*)
+
+  /** [[snapshot]], refusing a version without files. */
+  private def filled(spark: SparkSession, root: String, version: Option[Int]): Snapshot = {
     val s = snapshot(spark, root, version)
     require(s.files.nonEmpty, s"snapshot v${s.version} has no files")
-    spark.read.parquet(s.files: _*)
+    s
   }
 
   // ===== Zone maps: per-file min/max stats sidecar + pruned reads =====
@@ -370,27 +432,28 @@ object SnapshotSink {
   // batch — O(batch) like the count it replaces, and it yields the row
   // count for free); the sidecar is O(files × statsCols) parquet — at a
   // million files it is itself a well-formed small table, which is why
-  // it is stored as parquet and not folded into the JSON manifest. The
-  // sidecar is written BEFORE the manifest rename, so commit atomicity
-  // is unchanged: an unreferenced `.stats` dir from a crashed commit is
-  // invisible (readers resolve stats through the committed version
-  // number) and is swept by vacuum after the orphan grace.
+  // it is stored as parquet and not folded into the JSON manifest.
 
   private def statsDir(root: String, version: Int) =
     new Path(manifestDir(root), s"v$version.stats")
 
-  /** One row per data file: `file`, `rows`, and for each stats column
-    * `<c>__min` / `<c>__max` / `<c>__nulls` in the column's NATIVE type
-    * (parquet preserves it, so pruning comparisons never round-trip
-    * through strings). Exact bounds — computed from the committed rows
-    * themselves; a petabyte deployment could swap in a footer-metadata
-    * job without changing the sidecar contract. */
   /** Fixed-point type for per-file measure sums: exact, mergeable
     * across files (decimal addition is associative — the property the
     * metadata-only aggregate path rests on), and wide enough that
     * file-level partials never overflow. */
   private val SumDec = "decimal(30,6)"
 
+  /** The zone-map sidecar's columns for `statsCols` and `sumCols`. */
+  private def statsColumns(statsCols: Seq[String], sumCols: Seq[String]): Set[String] =
+    (Seq("file", "rows") ++ statsCols.flatMap(c => Seq(s"${c}__min", s"${c}__max", s"${c}__nulls")) ++
+      sumCols.map(m => s"${m}__sum")).toSet
+
+  /** One row per data file: `file`, `rows`, and for each stats column
+    * `<c>__min` / `<c>__max` / `<c>__nulls` in the column's NATIVE type
+    * (parquet preserves it, so pruning comparisons never round-trip
+    * through strings), and for each sum column `<m>__sum` in [[SumDec]].
+    * Exact bounds — computed from the committed rows themselves; the
+    * footer path below is the driver-side twin. */
   private def computeFileStats(
       spark: SparkSession, files: Seq[String], statsCols: Seq[String],
       sumCols: Seq[String] = Seq.empty): DataFrame = {
@@ -419,7 +482,8 @@ object SnapshotSink {
     * falls back to the distributed stats pass — so the sidecar CONTENT
     * is identical either way, by parquet's metadata contract.
     * Zero-row files get no sidecar row, exactly like the Spark path's
-    * groupBy over an empty scan. Returns (sidecar frame, total rows). */
+    * groupBy over an empty scan. Returns (sidecar frame, total rows);
+    * with no stats columns it is the footer row count of `files`. */
   private def footerFileStats(
       spark: SparkSession, files: Seq[String],
       statsCols: Seq[String]): Option[(DataFrame, Long)] = {
@@ -509,7 +573,8 @@ object SnapshotSink {
     }
 
   /** [[commit]], plus a zone-map sidecar over `statsCols`. The row count
-    * comes from the same single stats pass (no separate count job). */
+    * comes from the parquet footers or the same single stats pass (no
+    * separate count job). */
   def commitWithStats(df: DataFrame, root: String, statsCols: Seq[String]): Snapshot = {
     require(statsCols.nonEmpty, "commitWithStats needs at least one stats column")
     commitIndexed(df, root, statsCols, None)
@@ -519,8 +584,9 @@ object SnapshotSink {
     * the prior sidecar's rows (stats are per-file facts — files never
     * change once committed) plus the batch's freshly computed rows, so an
     * append costs O(batch) stats work + O(files) sidecar metadata, never
-    * a table re-scan. The prior version must itself carry stats over the
-    * same columns. */
+    * a table re-scan. The prior version must carry stats over the same
+    * columns and no set index (extend a dual-indexed lineage with
+    * [[appendIndexed]]). */
   def appendWithStats(df: DataFrame, root: String, statsCols: Seq[String]): Snapshot = {
     require(statsCols.nonEmpty, "appendWithStats needs at least one stats column")
     appendIndexed(df, root, statsCols, None)
@@ -553,31 +619,56 @@ object SnapshotSink {
     * the same order every manifest read already costs; a deployment with
     * millions of files would push this selection into a join against the
     * sidecar table instead. */
-  /** The zone-map kept-file list for `lo ≤ c ≤ hi` on `version` —
-    * shared by the single, set-composite and multi-range reads so the
-    * composite paths intersect LISTS instead of constructing and
-    * discarding DataFrames. */
-  private def keptByRange(
-      spark: SparkSession, root: String, version: Int,
-      c: String, lo: Any, hi: Any): Seq[String] = {
-    val mn = col(s"${c}__min")
-    val mx = col(s"${c}__max")
-    statsTable(spark, root, Some(version))
-      .filter(mn.isNotNull && mx.isNotNull && !(mn > lit(hi) || mx < lit(lo)))
-      .select("file").collect().map(_.getString(0)).toSeq.sorted
-  }
-
   def readPruned(
       spark: SparkSession, root: String, c: String, lo: Any, hi: Any,
+      version: Option[Int] = None): PrunedRead =
+    readPrunedRanges(spark, root, Seq((c, lo, hi)), version)
+
+  /** Conjunctive multi-range pruned read: keep only files whose bounds
+    * can intersect EVERY `(column, lo, hi)` range, then apply the full
+    * residual conjunction. This is the read side of a Z-ORDERED layout
+    * (`operators/ZOrder.zValue`): z-contiguous files span a narrow
+    * range of BOTH interleaved dimensions, so a two-predicate probe
+    * prunes multiplicatively where a single-column sort layout prunes
+    * on its sort key only — the Delta/Iceberg `OPTIMIZE ZORDER BY`
+    * serve, on the same sidecar [[readPruned]] uses. */
+  def readPrunedRanges(
+      spark: SparkSession, root: String, ranges: Seq[(String, Any, Any)],
       version: Option[Int] = None): PrunedRead = {
-    val s = snapshot(spark, root, version)
-    require(s.files.nonEmpty, s"snapshot v${s.version} has no files")
-    val kept = keptByRange(spark, root, s.version, c, lo, hi)
+    require(ranges.nonEmpty, "readPrunedRanges needs at least one range")
+    val s = filled(spark, root, version)
+    prunedRead(spark, s, keptByRanges(spark, root, s.version, ranges), Some(inRanges(ranges)))
+  }
+
+  /** The rows inside every `(column, lo, hi)` range. */
+  private def inRanges(ranges: Seq[(String, Any, Any)]): org.apache.spark.sql.Column =
+    ranges.map { case (c, lo, hi) => col(c) >= lit(lo) && col(c) <= lit(hi) }.reduce(_ && _)
+
+  /** The zone-map kept-file list for the conjunction of `ranges` on
+    * `version` — shared by the range and the set-composite reads, so the
+    * composite path intersects LISTS instead of constructing and
+    * discarding DataFrames. */
+  private def keptByRanges(
+      spark: SparkSession, root: String, version: Int,
+      ranges: Seq[(String, Any, Any)]): Seq[String] = {
+    val keep = ranges.map { case (c, lo, hi) =>
+      val mn = col(s"${c}__min")
+      val mx = col(s"${c}__max")
+      mn.isNotNull && mx.isNotNull && !(mn > lit(hi) || mx < lit(lo))
+    }.reduce(_ && _)
+    statsTable(spark, root, Some(version))
+      .filter(keep).select("file").collect().map(_.getString(0)).toSeq.sorted
+  }
+
+  /** The tail every pruned read shares: the kept files with the
+    * `residual` filter, or — when every file is pruned — an empty read
+    * that keeps the snapshot's schema. */
+  private def prunedRead(
+      spark: SparkSession, s: Snapshot, kept: Seq[String],
+      residual: Option[org.apache.spark.sql.Column]): PrunedRead = {
     val df =
-      if (kept.isEmpty)
-        spark.read.parquet(s.files: _*).filter(lit(false))
-      else
-        spark.read.parquet(kept: _*).filter(col(c) >= lit(lo) && col(c) <= lit(hi))
+      if (kept.isEmpty) spark.read.parquet(s.files: _*).filter(lit(false))
+      else residual.foldLeft(spark.read.parquet(kept: _*))(_ filter _)
     PrunedRead(df, kept.size, s.files.size, kept)
   }
 
@@ -638,73 +729,21 @@ object SnapshotSink {
       "commitIndexed needs at least one index (stats columns or set keys)")
     require(sumCols.isEmpty || statsCols.nonEmpty,
       "sumCols ride the zone-map sidecar — statsCols must be non-empty")
-    val spark = df.sparkSession
-    val files = writeFiles(df, root)
-    val version = versions(spark, root).lastOption.getOrElse(0) + 1
-    if (files.isEmpty) // zero-part write: an empty version, like commit()
-      return writeManifest(spark, root, version, Seq.empty, 0L)
-    var rows = -1L
-    if (statsCols.nonEmpty) {
-      fileStats(spark, files, statsCols, sumCols) match {
-        case (stats, Some(total)) => // footer-exact: no stats job, no count
-          rows = total
-          stats.coalesce(1).write.mode("overwrite")
-            .parquet(statsDir(root, version).toString)
-        case (fresh, None) =>
-          val stats = fresh.coalesce(1).localCheckpoint(true)
-          rows = totalRows(stats)
-          stats.write.mode("overwrite").parquet(statsDir(root, version).toString)
-      }
-    }
-    setKeys.foreach { case (keys, expectedPerFile, fpp) =>
-      val idx = computeSetIndex(spark, files, keys, expectedPerFile, fpp)
-        .coalesce(1).localCheckpoint(true)
-      if (rows < 0)
-        rows = totalRows(idx)
-      idx.write.mode("overwrite").parquet(setIndexDir(root, version).toString)
-    }
-    writeManifest(spark, root, version, files, rows)
-  }
-
-  /** Conjunctive multi-range pruned read: keep only files whose bounds
-    * can intersect EVERY `(column, lo, hi)` range, then apply the full
-    * residual conjunction. This is the read side of a Z-ORDERED layout
-    * (`operators/ZOrder.zValue`): z-contiguous files span a narrow
-    * range of BOTH interleaved dimensions, so a two-predicate probe
-    * prunes multiplicatively where a single-column sort layout prunes
-    * on its sort key only — the Delta/Iceberg `OPTIMIZE ZORDER BY`
-    * serve, on the same sidecar [[readPruned]] uses. */
-  def readPrunedRanges(
-      spark: SparkSession, root: String, ranges: Seq[(String, Any, Any)],
-      version: Option[Int] = None): PrunedRead = {
-    require(ranges.nonEmpty, "readPrunedRanges needs at least one range")
-    val s = snapshot(spark, root, version)
-    require(s.files.nonEmpty, s"snapshot v${s.version} has no files")
-    val keep = ranges.map { case (c, lo, hi) =>
-      val mn = col(s"${c}__min")
-      val mx = col(s"${c}__max")
-      mn.isNotNull && mx.isNotNull && !(mn > lit(hi) || mx < lit(lo))
-    }.reduce(_ && _)
-    val kept = statsTable(spark, root, Some(s.version))
-      .filter(keep).select("file").collect().map(_.getString(0)).toSeq.sorted
-    val residual = ranges.map { case (c, lo, hi) =>
-      col(c) >= lit(lo) && col(c) <= lit(hi)
-    }.reduce(_ && _)
-    val df =
-      if (kept.isEmpty) spark.read.parquet(s.files: _*).filter(lit(false))
-      else spark.read.parquet(kept: _*).filter(residual)
-    PrunedRead(df, kept.size, s.files.size, kept)
+    commitVersion(df.sparkSession, root, None, Nil, writeFiles(df, root),
+      statsCols, sumCols, setKeys)
   }
 
   /** [[appendWithStats]]'s generalization to both sidecars: add-files
-    * append with the zone-map sidecar extended by the batch's rows and
-    * the set-index sidecar extended by the batch's per-file filters
+    * append under the one sidecar rule of the commit path — the new
+    * version's zone map and set index are the prior version's rows
     * (per-file facts both — files never change once committed, so prior
-    * sidecar rows carry over verbatim; O(batch) index work + O(files)
-    * sidecar metadata per append). Each sidecar is extended only if the
-    * prior version carries it (and the batch must then supply the
-    * matching columns/keys), so a stats-only lineage stays stats-only
-    * under the specialized entry points. */
+    * sidecar rows carry over verbatim) plus the batch's fresh rows;
+    * O(batch) index work + O(files) sidecar metadata per append. The
+    * lineage keeps the sidecars it was first committed with: the append
+    * must pass exactly the prior version's index parameters — `statsCols`
+    * and `sumCols` if it carries a zone map, `setKeys` if it carries a set
+    * index, neither if it does not — or it is refused. An empty batch
+    * commits nothing and returns the prior snapshot. */
   def appendIndexed(
       df: DataFrame, root: String, statsCols: Seq[String],
       setKeys: Option[(org.apache.spark.sql.Column, Long, Double)],
@@ -714,58 +753,11 @@ object SnapshotSink {
     require(sumCols.isEmpty || statsCols.nonEmpty,
       "sumCols ride the zone-map sidecar — statsCols must be non-empty")
     val spark = df.sparkSession
-    val prior = versions(spark, root).lastOption.map { v =>
-      (snapshot(spark, root, Some(v)), v)
-    }
+    val prior = latest(spark, root)
     val files = writeFiles(df, root)
-    if (files.isEmpty) // empty batch: nothing to add, no version burned
-      return prior.map(_._1).getOrElse(
-        writeManifest(spark, root, 1, Seq.empty, 0L))
-    val version = prior.map(_._2).getOrElse(0) + 1
-    val all = (prior.map(_._1.files).getOrElse(Seq.empty) ++ files).sorted
-    var rows = -1L
-    if (statsCols.nonEmpty) {
-      val (fresh, freshTotal) = fileStats(spark, files, statsCols, sumCols)
-      val stats = prior.map { p =>
-        val pst = statsTable(spark, root, Some(p._2))
-        // loud schema guard: an append must extend the sidecar with the
-        // SAME statsCols/sumCols the lineage was committed with, or a
-        // sum-carrying lineage silently becomes unappendable
-        require(pst.columns.toSet == fresh.columns.toSet,
-          s"stats sidecar schema mismatch: prior has " +
-            s"[${pst.columns.sorted.mkString(",")}], this append computes " +
-            s"[${fresh.columns.sorted.mkString(",")}] — pass the lineage's " +
-            "original statsCols and sumCols")
-        pst.unionByName(fresh)
-      }.getOrElse(fresh)
-      freshTotal match {
-        case Some(t) => // footer-exact batch stats: the new total is the
-          // prior manifest's count plus the batch (no count job), and the
-          // sidecar union is prior-parquet + a local relation (no
-          // recompute risk worth a checkpoint)
-          rows = prior.map(_._1.rows).getOrElse(0L) + t
-          stats.coalesce(1).write.mode("overwrite")
-            .parquet(statsDir(root, version).toString)
-        case None =>
-          val cp = stats.coalesce(1).localCheckpoint(true)
-          rows = totalRows(cp)
-          cp.write.mode("overwrite").parquet(statsDir(root, version).toString)
-      }
-    }
-    setKeys.foreach { case (keys, expectedPerFile, fpp) =>
-      val fresh = computeSetIndex(spark, files, keys, expectedPerFile, fpp)
-      val idx = prior.map { p =>
-        val pd = setIndexDir(root, p._2)
-        require(fs(spark, pd).exists(pd),
-          s"prior snapshot v${p._2} has no set index to extend " +
-            "(committed without one — use commitWithSetIndex/commitIndexed)")
-        spark.read.parquet(pd.toString).unionByName(fresh)
-      }.getOrElse(fresh).coalesce(1).localCheckpoint(true)
-      if (rows < 0)
-        rows = totalRows(idx)
-      idx.write.mode("overwrite").parquet(setIndexDir(root, version).toString)
-    }
-    writeManifest(spark, root, version, all, rows)
+    prior.filter(_ => files.isEmpty).getOrElse(
+      commitVersion(spark, root, prior, prior.fold(Seq.empty[String])(_.files), files,
+        statsCols, sumCols, setKeys))
   }
 
   /** Read `version` (default latest) pruned by BOTH indexes: files must
@@ -776,19 +768,29 @@ object SnapshotSink {
   def readPrunedBoth(
       spark: SparkSession, root: String, c: String, lo: Any, hi: Any, h: Long,
       version: Option[Int] = None): PrunedRead = {
-    val s = snapshot(spark, root, version)
-    require(s.files.nonEmpty, s"snapshot v${s.version} has no files")
+    val s = filled(spark, root, version)
     // intersect CANONICAL paths: the two sidecars may render the same
     // file in different URI forms (footer-stats path: Path.toString
     // `file:/…`; set-index path: input_file_name() `file:///…`) — the
     // q154 lesson applied to a cross-SIDECAR comparison
-    val setCanon = keptBySet(spark, root, s.version, h).map(canon).toSet
-    val kept = keptByRange(spark, root, s.version, c, lo, hi)
-      .filter(f => setCanon.contains(canon(f))).sorted
-    val df =
-      if (kept.isEmpty) spark.read.parquet(s.files: _*).filter(lit(false))
-      else spark.read.parquet(kept: _*).filter(col(c) >= lit(lo) && col(c) <= lit(hi))
-    PrunedRead(df, kept.size, s.files.size, kept)
+    val setCanon = keptBySet(spark, root, s.version, Array(h)).map(canon).toSet
+    val range = Seq((c, lo, hi))
+    val kept = keptByRanges(spark, root, s.version, range)
+      .filter(f => setCanon.contains(canon(f)))
+    prunedRead(spark, s, kept, Some(inRanges(range)))
+  }
+
+  /** The set-index kept-file list on `version`: files whose filter might
+    * contain any of `hs`. */
+  private def keptBySet(
+      spark: SparkSession, root: String, version: Int, hs: Array[Long]): Seq[String] = {
+    val p = setIndexDir(root, version)
+    require(fs(spark, p).exists(p),
+      s"snapshot v$version has no set index (committed without one — " +
+        "use commitWithSetIndex)")
+    spark.read.parquet(p.toString).select("file", "bloom").collect()
+      .filter(r => graft.plans.BloomSetAgg.mightContainAny(r.getAs[Array[Byte]]("bloom"), hs))
+      .map(_.getString(0)).toSeq.sorted
   }
 
   /** Read `version` (default latest) keeping only files whose set index
@@ -797,28 +799,11 @@ object SnapshotSink {
     * predicate; a pruned file provably has no such row). Per-file probe
     * runs on the driver over the sidecar — metadata-scale, like the
     * zone-map path. */
-  /** The set-index kept-file list for probe `h` on `version`. */
-  private def keptBySet(
-      spark: SparkSession, root: String, version: Int, h: Long): Seq[String] = {
-    val p = setIndexDir(root, version)
-    require(fs(spark, p).exists(p),
-      s"snapshot v$version has no set index (committed without one — " +
-        "use commitWithSetIndex)")
-    spark.read.parquet(p.toString).select("file", "bloom").collect()
-      .filter(r => graft.plans.BloomSetAgg.mightContain(r.getAs[Array[Byte]]("bloom"), h))
-      .map(_.getString(0)).toSeq.sorted
-  }
-
   def readSetPruned(
       spark: SparkSession, root: String, h: Long,
       version: Option[Int] = None): PrunedRead = {
-    val s = snapshot(spark, root, version)
-    require(s.files.nonEmpty, s"snapshot v${s.version} has no files")
-    val kept = keptBySet(spark, root, s.version, h)
-    val df =
-      if (kept.isEmpty) spark.read.parquet(s.files: _*).filter(lit(false))
-      else spark.read.parquet(kept: _*)
-    PrunedRead(df, kept.size, s.files.size, kept)
+    val s = filled(spark, root, version)
+    prunedRead(spark, s, keptBySet(spark, root, s.version, Array(h)), None)
   }
 
   /** METADATA-ONLY AGGREGATE SERVING — the endgame of the zone-map
@@ -845,8 +830,7 @@ object SnapshotSink {
   def aggRangeFromStats(
       spark: SparkSession, root: String, c: String, lo: Any, hi: Any,
       measure: String, version: Option[Int] = None): AggServed = {
-    val s = snapshot(spark, root, version)
-    require(s.files.nonEmpty, s"snapshot v${s.version} has no files")
+    val s = filled(spark, root, version)
     val st = statsTable(spark, root, Some(s.version))
     require(st.columns.contains(s"${measure}__sum"),
       s"snapshot v${s.version} has no per-file sums for '$measure' " +
@@ -880,62 +864,6 @@ object SnapshotSink {
     AggServed(out, meta.length, boundary.length, s.files.size)
   }
 
-  /** The shared sidecar tail of every targeted maintenance op
-    * (delete/upsert/TTL): write version `version`'s sidecars by
-    * CARRYING the prior version's rows for files whose canonical path
-    * is in `carriedCanon` and recomputing rows for `newFiles`.
-    * WHICHEVER sidecar the prior version carries is extended — a
-    * dual-indexed lineage (commitIndexed with stats AND set keys) stays
-    * dual-indexed through maintenance; a present sidecar whose rebuild
-    * parameters weren't passed is refused loudly rather than silently
-    * severed. Returns the new version's total rows. */
-  private def carrySidecars(
-      spark: SparkSession, root: String, priorVersion: Int, version: Int,
-      carriedCanon: Set[String], newFiles: Seq[String],
-      statsCols: Seq[String], sumCols: Seq[String],
-      setKeys: Option[(org.apache.spark.sql.Column, Long, Double)]): Long = {
-    var rows = -1L
-    def carried(sidecar: DataFrame): DataFrame = {
-      val keepList = sidecar.select("file").collect().map(_.getString(0))
-        .filter(f => carriedCanon.contains(canon(f))).toSeq
-      sidecar.filter(col("file").isin(keepList: _*))
-    }
-    val sd = statsDir(root, priorVersion)
-    if (fs(spark, sd).exists(sd)) {
-      require(statsCols.nonEmpty,
-        "lineage carries a zone-map sidecar — pass its statsCols (and " +
-          "sumCols) so the maintenance op can extend it")
-      val prior = carried(spark.read.parquet(sd.toString))
-      val fresh =
-        if (newFiles.isEmpty) prior.limit(0)
-        else fileStats(spark, newFiles, statsCols, sumCols)._1
-      require(prior.columns.toSet == fresh.columns.toSet,
-        s"stats sidecar schema mismatch: prior has " +
-          s"[${prior.columns.sorted.mkString(",")}], this op computes " +
-          s"[${fresh.columns.sorted.mkString(",")}] — pass the lineage's " +
-          "original statsCols and sumCols")
-      val stats = prior.unionByName(fresh).coalesce(1).localCheckpoint(true)
-      rows = totalRows(stats)
-      stats.write.mode("overwrite").parquet(statsDir(root, version).toString)
-    }
-    val xd = setIndexDir(root, priorVersion)
-    if (fs(spark, xd).exists(xd)) {
-      require(setKeys.nonEmpty,
-        "lineage carries a set index — pass setKeys (keys column, " +
-          "expectedPerFile, fpp) so the maintenance op can extend it")
-      val (keys, expectedPerFile, fpp) = setKeys.get
-      val prior = carried(spark.read.parquet(xd.toString))
-      val idx = (if (newFiles.isEmpty) prior
-        else prior.unionByName(
-          computeSetIndex(spark, newFiles, keys, expectedPerFile, fpp)))
-        .coalesce(1).localCheckpoint(true)
-      if (rows < 0) rows = totalRows(idx)
-      idx.write.mode("overwrite").parquet(setIndexDir(root, version).toString)
-    }
-    require(rows >= 0, "lineage has no sidecars to carry")
-    rows
-  }
-
   /** TARGETED DELETE — the lakehouse DELETE with the Bloom set index
     * doing the file targeting, and the store-side half of the q124
     * right-to-be-forgotten pass: only files whose set index might
@@ -962,20 +890,14 @@ object SnapshotSink {
       statsCols: Seq[String] = Seq.empty,
       sumCols: Seq[String] = Seq.empty): Snapshot = {
     val s = snapshot(spark, root)
-    val hitFiles = keptBySet(spark, root, s.version, h)
+    val hitFiles = keptBySet(spark, root, s.version, Array(h))
     if (hitFiles.isEmpty) return s // nothing can match — no new version
     val hitCanon = hitFiles.map(canon).toSet
-    val carriedCanon = s.files.map(canon).toSet -- hitCanon
-    val untouched = s.files.filterNot(f => hitCanon.contains(canon(f)))
     val survivors = spark.read.parquet(hitFiles: _*)
       .filter(!coalesce(pred, lit(false)))
       .coalesce(hitFiles.size)
-    val newFiles = writeFiles(survivors, root)
-    val version = s.version + 1
-    val all = (untouched ++ newFiles).sorted
-    val rows = carrySidecars(spark, root, s.version, version, carriedCanon,
-      newFiles, statsCols, sumCols, Some((keys, expectedPerFile, fpp)))
-    writeManifest(spark, root, version, all, rows)
+    commitVersion(spark, root, Some(s), s.files.filterNot(f => hitCanon.contains(canon(f))),
+      writeFiles(survivors, root), statsCols, sumCols, Some((keys, expectedPerFile, fpp)))
   }
 
   /** RANGE EXPIRY — ClickHouse's `TTL … DELETE` / `DROP PARTITION` on
@@ -990,9 +912,9 @@ object SnapshotSink {
     * (the filter keeps null-`c` rows — strict `c < cutoff` deletion,
     * same null convention as [[deleteMatching]]). Sidecar rows carry
     * for kept files and recompute for rewritten ones — pass the same
-    * `statsCols`/`sumCols` the lineage was committed with (the sidecar
-    * union is schema-checked); prior versions time-travel until vacuum,
-    * which is the retention/erasure clock. */
+    * `statsCols`/`sumCols`/`setKeys` the lineage was committed with (the
+    * commit path refuses anything else); prior versions time-travel until
+    * vacuum, which is the retention/erasure clock. */
   def expireBelow(
       spark: SparkSession, root: String, c: String, cutoff: Any,
       statsCols: Seq[String], sumCols: Seq[String] = Seq.empty,
@@ -1015,22 +937,18 @@ object SnapshotSink {
       .map(r => canon(r.getString(0))).toSet
     // dropped files need no action at all — they are simply absent from
     // the next manifest; boundary = neither kept nor dropped
-    val boundarySidecar = parts
+    val boundary = parts
       .filter(r => !r.getAs[Boolean]("keep") && !r.getAs[Boolean]("drop"))
       .map(_.getString(0)).toSeq.sorted
-    val kept = s.files.filter(f => keepCanon.contains(canon(f)))
     val newFiles =
-      if (boundarySidecar.isEmpty) Seq.empty[String]
+      if (boundary.isEmpty) Seq.empty[String]
       else writeFiles(
-        spark.read.parquet(boundarySidecar: _*)
+        spark.read.parquet(boundary: _*)
           .filter(col(c).isNull || col(c) >= lit(cutoff))
-          .coalesce(boundarySidecar.size),
+          .coalesce(boundary.size),
         root)
-    val version = s.version + 1
-    val all = (kept ++ newFiles).sorted
-    val rows = carrySidecars(spark, root, s.version, version, keepCanon,
+    commitVersion(spark, root, Some(s), s.files.filter(f => keepCanon.contains(canon(f))),
       newFiles, statsCols, sumCols, setKeys)
-    writeManifest(spark, root, version, all, rows)
   }
 
   /** KEYED UPSERT — the ReplacingMergeTree merge made explicit on the
@@ -1058,10 +976,6 @@ object SnapshotSink {
       sumCols: Seq[String] = Seq.empty): Snapshot = {
     require(keyCols.nonEmpty, "upsertKeyed needs key columns")
     val s = snapshot(spark, root)
-    val idxPath = setIndexDir(root, s.version)
-    require(fs(spark, idxPath).exists(idxPath),
-      s"snapshot v${s.version} has no set index (upsert needs key targeting — " +
-        "use commitWithSetIndex)")
     // the batch's distinct key hashes — bounded by the batch
     val ksDf = batch.select(keys.as("ks"))
     val hashes: Array[Long] = (ksDf.schema("ks").dataType match {
@@ -1069,26 +983,16 @@ object SnapshotSink {
         ksDf.select(explode(col("ks")).as("h"))
       case _ => ksDf.select(col("ks").as("h"))
     }).filter(col("h").isNotNull).distinct().collect().map(_.getLong(0))
-    val sidecar = spark.read.parquet(idxPath.toString)
-    val parts = sidecar.select("file", "bloom").collect()
-    val hitSidecarFiles = parts.filter(r =>
-        graft.plans.BloomSetAgg.mightContainAny(r.getAs[Array[Byte]]("bloom"), hashes))
-      .map(_.getString(0)).toSeq.sorted
-    val hitCanon = hitSidecarFiles.map(canon).toSet
-    val untouched = s.files.filterNot(f => hitCanon.contains(canon(f)))
+    val hitFiles = keptBySet(spark, root, s.version, hashes)
+    val hitCanon = hitFiles.map(canon).toSet
     val stored =
-      if (hitSidecarFiles.isEmpty) batch.filter(lit(false))
-      else spark.read.parquet(hitSidecarFiles: _*)
+      if (hitFiles.isEmpty) batch.filter(lit(false))
+      else spark.read.parquet(hitFiles: _*)
     val resolved = graft.etl.Dedup.lastWriteWins(
       stored.unionByName(batch), keyCols, verCol, tieBreak)
-      .coalesce(math.max(1, hitSidecarFiles.size))
-    val newFiles = writeFiles(resolved, root)
-    val version = s.version + 1
-    val all = (untouched ++ newFiles).sorted
-    val carriedCanon = s.files.map(canon).toSet -- hitCanon
-    val rows = carrySidecars(spark, root, s.version, version, carriedCanon,
-      newFiles, statsCols, sumCols, Some((keys, expectedPerFile, fpp)))
-    writeManifest(spark, root, version, all, rows)
+      .coalesce(math.max(1, hitFiles.size))
+    commitVersion(spark, root, Some(s), s.files.filterNot(f => hitCanon.contains(canon(f))),
+      writeFiles(resolved, root), statsCols, sumCols, Some((keys, expectedPerFile, fpp)))
   }
 
   /** COMPACTION — the explicit form of ClickHouse's background part

@@ -57,21 +57,32 @@ final class WarehouseSink(val catalog: TableCatalog) extends Warehouse {
       else Seq(Timestamp, MessageId)
     val dedupKeys = wantedKeys.filter(current.columns.contains)
     if (dedupKeys.size != wantedKeys.size) return 0L
-    val deduped = current.dropDuplicates(dedupKeys)
-      .localCheckpoint(true) // materialize before replacing the source files
-    val before = current.count()
-    val after  = deduped.count()
-    replaceTableContents(spark, db, t)(tmp => layout(deduped).mode("overwrite").parquet(tmp))
-    before - after
+    // `replaceTableContents` finishes the staged write before it touches
+    // the table, so the dedup reads the current files straight into the
+    // new ones; both row counts come from parquet footers
+    val before = SnapshotSink.parquetRows(spark, current.inputFiles.toSeq)
+    replaceTableContents(spark, db, t) { tmp =>
+      layout(current.dropDuplicates(dedupKeys)).mode("overwrite").parquet(tmp)
+      before - SnapshotSink.parquetRows(spark, parquetFiles(spark, tmp))
+    }
+  }
+
+  /** The data files of a freshly written table directory (its partition
+    * subdirectories included). */
+  private def parquetFiles(spark: SparkSession, dir: String): Seq[String] = {
+    val p = new org.apache.hadoop.fs.Path(dir)
+    val it = p.getFileSystem(spark.sparkContext.hadoopConfiguration).listFiles(p, true)
+    Iterator.continually(it).takeWhile(_.hasNext).map(_.next().getPath)
+      .filter(_.getName.endsWith(".parquet")).map(_.toString).toSeq
   }
 
   /** Stage-then-swap replacement of a table directory, preserving the
-    * catalog's authoritative schema marker. */
-  private def replaceTableContents(spark: SparkSession, db: String, t: String)(
-      write: String => Unit): Unit = {
+    * catalog's authoritative schema marker. Returns what `write` returns. */
+  private def replaceTableContents[T](spark: SparkSession, db: String, t: String)(
+      write: String => T): T = {
     val target = catalog.tablePath(db, t)
     val tmp    = target + "__staged"
-    write(tmp)
+    val out = write(tmp)
     val tgtPath = new org.apache.hadoop.fs.Path(target)
     val tmpPath = new org.apache.hadoop.fs.Path(tmp)
     // resolve the FS from the path's own scheme (s3a://, hdfs://, file://),
@@ -81,7 +92,7 @@ final class WarehouseSink(val catalog: TableCatalog) extends Warehouse {
     if (fs.exists(tgtPath)) fs.delete(tgtPath, true)
     fs.rename(tmpPath, tgtPath)
     schemaJson.foreach(s => catalog.ensureTableStructure(db, t, s))
-    ()
+    out
   }
 
   override protected def currentUsers(spark: SparkSession, db: String): Option[DataFrame] =

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
@@ -27,12 +27,13 @@ import graft.sink.SnapshotSink
   * REPLAY SAFETY: foreachBatch is at-least-once — after a crash between
   * a successful commit and the checkpoint's offset write, the same
   * micro-batch re-runs. KMV's merge is idempotent (`merge(s, s) = s`),
-  * but count-min's is ADDITION, which double-counts on replay — so both
-  * variants record the committed batch id in a marker file
-  * (`_batches/b<id>`, written AFTER the snapshot commit) and skip a
-  * batch id already marked. The marker can lag the commit by a crash
-  * (commit landed, marker didn't): the replay then re-merges that one
-  * batch — harmless for KMV, and for CM this is the standard
+  * but count-min's is ADDITION, which double-counts on replay — so every
+  * ingestion here commits through one guard that records the committed
+  * batch id in a marker file (`_batches/b<id>`, written AFTER the
+  * snapshot commit) and skips a batch id already marked. The marker can
+  * lag the commit by a crash (commit landed, marker didn't): the replay
+  * then re-merges that one batch — harmless for KMV, and for CM this is
+  * the standard
   * at-least-once residual that an exactly-once deployment closes by
   * making the marker write part of the commit (single-committer rename,
   * same journal). Markers are tiny and bounded by batch count.
@@ -42,19 +43,40 @@ import graft.sink.SnapshotSink
   * table — events never accumulate anywhere. */
 object StateRollup {
 
-  private def batchMarker(spark: SparkSession, root: String, id: Long): org.apache.hadoop.fs.Path =
+  private def batchMarker(root: String, id: Long): org.apache.hadoop.fs.Path =
     new org.apache.hadoop.fs.Path(new org.apache.hadoop.fs.Path(root, "_batches"), s"b$id")
 
-  private def alreadyCommitted(spark: SparkSession, root: String, id: Long): Boolean = {
-    val p = batchMarker(spark, root, id)
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
-  }
-
-  private def markCommitted(spark: SparkSession, root: String, id: Long): Unit = {
-    val p = batchMarker(spark, root, id)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.mkdirs(p.getParent)
-    fs.create(p, true).close()
+  /** The one replay-guarded micro-batch committer behind every ingestion
+    * here: persist the batch, skip a batch id already marked and an empty
+    * batch, `commit` it, mark its id, then retire all but the last
+    * `keepVersions` snapshots. */
+  private def guardedCommits(
+      stream: DataFrame, root: String, checkpointDir: String,
+      trigger: Trigger, keepVersions: Int)(commit: DataFrame => Unit): StreamingQuery = {
+    require(keepVersions >= 1, "keepVersions must be >= 1")
+    stream.writeStream
+      .outputMode("append")
+      .option("checkpointLocation", checkpointDir)
+      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+        // persist: the emptiness probe and the commit must not re-read
+        // the source twice per trigger
+        val b = batch.persist()
+        try {
+          val spark = b.sparkSession
+          val marker = batchMarker(root, batchId)
+          val fs = marker.getFileSystem(spark.sparkContext.hadoopConfiguration)
+          if (!fs.exists(marker) && b.take(1).nonEmpty) {
+            commit(b)
+            fs.mkdirs(marker.getParent)
+            fs.create(marker, true).close()
+            if (keepVersions != Int.MaxValue)
+              SnapshotSink.vacuum(spark, root, keepLast = keepVersions)
+            ()
+          }
+        } finally { b.unpersist(); () }
+      }
+      .trigger(trigger)
+      .start()
   }
 
   /** Start an AvailableNow/continuous ingestion of `stream` (must carry
@@ -79,32 +101,16 @@ object StateRollup {
       trigger: Trigger = Trigger.AvailableNow(),
       keepVersions: Int = 3
   ): StreamingQuery = {
-    require(keepVersions >= 1, "keepVersions must be >= 1")
-    stream.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        // persist: the emptiness probe and the sketch build must not
-        // re-read the source twice per trigger
-        val b = batch.filter(col(valueCol).isNotNull).persist()
-        try {
-          val spark = b.sparkSession
-          if (!alreadyCommitted(spark, root, batchId) && b.take(1).nonEmpty) {
-            val states = Cardinality.kmvSketches(b, valueCol, dayCol, k)
-              .withColumnRenamed("segment", "day")
-            val merged =
-              if (SnapshotSink.versions(spark, root).isEmpty) states
-              else Cardinality.mergeKmvStates(SnapshotSink.read(spark, root), states, k)
-            SnapshotSink.commit(merged, root)
-            markCommitted(spark, root, batchId)
-            if (keepVersions != Int.MaxValue)
-              SnapshotSink.vacuum(spark, root, keepLast = keepVersions)
-            ()
-          }
-        } finally { b.unpersist(); () }
-      }
-      .trigger(trigger)
-      .start()
+    guardedCommits(stream.filter(col(valueCol).isNotNull), root, checkpointDir,
+        trigger, keepVersions) { b =>
+      val spark = b.sparkSession
+      val states = Cardinality.kmvSketches(b, valueCol, dayCol, k)
+        .withColumnRenamed("segment", "day")
+      SnapshotSink.commit(
+        if (SnapshotSink.versions(spark, root).isEmpty) states
+        else Cardinality.mergeKmvStates(SnapshotSink.read(spark, root), states, k),
+        root)
+    }
   }
 
   /** CORPUS-TABLE maintenance twin: where the two state variants fold
@@ -134,29 +140,13 @@ object StateRollup {
   ): StreamingQuery = {
     require(statsCols.nonEmpty, "appendIndexedBatches needs stats columns")
     require(filesPerBatch >= 1, "filesPerBatch must be >= 1")
-    require(keepVersions >= 1, "keepVersions must be >= 1")
-    stream.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val b = batch.persist()
-        try {
-          val spark = b.sparkSession
-          if (!alreadyCommitted(spark, root, batchId) && b.take(1).nonEmpty) {
-            val laid = clusterCol match {
-              case Some(c) => b.repartitionByRange(filesPerBatch, col(c))
-              case None => b.coalesce(filesPerBatch)
-            }
-            SnapshotSink.appendWithStats(laid, root, statsCols)
-            markCommitted(spark, root, batchId)
-            if (keepVersions != Int.MaxValue)
-              SnapshotSink.vacuum(spark, root, keepLast = keepVersions)
-            ()
-          }
-        } finally { b.unpersist(); () }
+    guardedCommits(stream, root, checkpointDir, trigger, keepVersions) { b =>
+      val laid = clusterCol match {
+        case Some(c) => b.repartitionByRange(filesPerBatch, col(c))
+        case None => b.coalesce(filesPerBatch)
       }
-      .trigger(trigger)
-      .start()
+      SnapshotSink.appendWithStats(laid, root, statsCols)
+    }
   }
 
   /** STREAMING KEYED UPSERT — the reference's whole pipeline shape
@@ -183,33 +173,18 @@ object StateRollup {
       trigger: Trigger = Trigger.AvailableNow(),
       keepVersions: Int = 3
   ): StreamingQuery = {
-    require(keepVersions >= 1, "keepVersions must be >= 1")
-    stream.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val b = batch.persist()
-        try {
-          val spark = b.sparkSession
-          if (!alreadyCommitted(spark, root, batchId) && b.take(1).nonEmpty) {
-            if (SnapshotSink.versions(spark, root).isEmpty) {
-              val winners = graft.etl.Dedup.lastWriteWins(b, keyCols, verCol, tieBreak)
-              SnapshotSink.commitWithSetIndex(
-                winners.repartition(buckets, keyCols.map(col): _*),
-                root, keys, expectedPerFile)
-            } else {
-              SnapshotSink.upsertKeyed(spark, root, b, keyCols, verCol,
-                tieBreak, keys, expectedPerFile)
-            }
-            markCommitted(spark, root, batchId)
-            if (keepVersions != Int.MaxValue)
-              SnapshotSink.vacuum(spark, root, keepLast = keepVersions)
-            ()
-          }
-        } finally { b.unpersist(); () }
+    guardedCommits(stream, root, checkpointDir, trigger, keepVersions) { b =>
+      val spark = b.sparkSession
+      if (SnapshotSink.versions(spark, root).isEmpty) {
+        val winners = graft.etl.Dedup.lastWriteWins(b, keyCols, verCol, tieBreak)
+        SnapshotSink.commitWithSetIndex(
+          winners.repartition(buckets, keyCols.map(col): _*),
+          root, keys, expectedPerFile)
+      } else {
+        SnapshotSink.upsertKeyed(spark, root, b, keyCols, verCol,
+          tieBreak, keys, expectedPerFile)
       }
-      .trigger(trigger)
-      .start()
+    }
   }
 
   /** The COUNT-MIN twin of [[appendDailyKmvStates]]: each micro-batch's
@@ -233,29 +208,15 @@ object StateRollup {
       trigger: Trigger = Trigger.AvailableNow(),
       keepVersions: Int = 3
   ): StreamingQuery = {
-    require(keepVersions >= 1, "keepVersions must be >= 1")
-    stream.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val b = batch.filter(col(valueCol).isNotNull).persist()
-        try {
-          val spark = b.sparkSession
-          if (!alreadyCommitted(spark, root, batchId) && b.take(1).nonEmpty) {
-            val nn = b.select(col(dayCol).as("d"), col(valueCol).cast("string").as("v"))
-            val states = CountMin.dailyStates(nn, "v", "d", depth, width)
-            val merged =
-              if (SnapshotSink.versions(spark, root).isEmpty) states
-              else CountMin.mergeDailyStates(SnapshotSink.read(spark, root), states)
-            SnapshotSink.commit(merged, root)
-            markCommitted(spark, root, batchId)
-            if (keepVersions != Int.MaxValue)
-              SnapshotSink.vacuum(spark, root, keepLast = keepVersions)
-            ()
-          }
-        } finally { b.unpersist(); () }
-      }
-      .trigger(trigger)
-      .start()
+    guardedCommits(stream.filter(col(valueCol).isNotNull), root, checkpointDir,
+        trigger, keepVersions) { b =>
+      val spark = b.sparkSession
+      val nn = b.select(col(dayCol).as("d"), col(valueCol).cast("string").as("v"))
+      val states = CountMin.dailyStates(nn, "v", "d", depth, width)
+      SnapshotSink.commit(
+        if (SnapshotSink.versions(spark, root).isEmpty) states
+        else CountMin.mergeDailyStates(SnapshotSink.read(spark, root), states),
+        root)
+    }
   }
 }

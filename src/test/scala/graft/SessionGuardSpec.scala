@@ -9,8 +9,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * releases retained blocks only through `graft.util.GraftSession`, so
   * Bench, Verify and the tools cannot drift apart in config again; and the
   * warehouse load protocol lives only in `graft.sink.Warehouse`, so the
-  * parquet, JDBC and ClickHouse sinks cannot drift apart in it again; and
-  * driver threads come only from `graft.util.Par`'s bounded pool. */
+  * parquet, JDBC and ClickHouse sinks cannot drift apart in it again;
+  * driver threads come only from `graft.util.Par`'s bounded pool; and the
+  * snapshot store and the state rollup each commit through one path. */
 class SessionGuardSpec extends AnyFunSuite {
   private val root = Paths.get("src/main/scala")
   private val factory = Paths.get("graft/util/GraftSession.scala")
@@ -34,6 +35,20 @@ class SessionGuardSpec extends AnyFunSuite {
 
   test("thread pools are made only in Par, whose pool is bounded") {
     assert(filesMentioning("Executors.new") == Seq(Paths.get("graft/util/Par.scala")))
+  }
+
+  test("StateRollup has one foreachBatch; renameOrThrow is called only from the store's temp-file-and-rename helper") {
+    def read(rel: String) = Files.readString(root.resolve(rel))
+    assert("\\.foreachBatch".r.findAllIn(read("graft/streaming/StateRollup.scala")).size == 1)
+    val store = Paths.get("graft/sink/SnapshotSink.scala")
+    assert(filesMentioning("renameOrThrow(") == Seq(store))
+    // every call (not the definition) sits inside writeNoClobber's body
+    val src = read(store.toString)
+    val definition = src.indexOf("private def renameOrThrow(") + "private def ".length
+    val calls = "renameOrThrow\\(".r.findAllMatchIn(src).map(_.start).filter(_ != definition).toSeq
+    val helper = src.indexOf("private def writeNoClobber(")
+    val helperEnd = src.indexOf("\n  }\n", helper)
+    assert(helper >= 0 && calls.nonEmpty && calls.forall(i => i > helper && i < helperEnd), calls)
   }
 
   test("misfit dedup and the users stream appear only in the Warehouse load protocol") {

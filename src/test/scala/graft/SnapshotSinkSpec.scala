@@ -342,6 +342,37 @@ class SnapshotSinkSpec extends AnyFunSuite {
     assert(e2.getMessage.contains("setKeys"))
   }
 
+  test("one sidecar rule: an op on a prior version must pass exactly its index parameters") {
+    import org.apache.spark.sql.functions._
+    def keys = graft.plans.SketchFunctions.portableHash64(array(col("e").cast("string")))
+    val sk = Some((keys, 64L, 0.01))
+    def rows(lo: Long, hi: Long) = spark.range(lo, hi)
+      .select(expr("id DIV 10").as("e"), col("id").as("day"))
+    // a lineage built with stats AND a set index keeps both: extending it
+    // with stats alone would commit a version without the set index
+    val dual = tmpRoot()
+    SnapshotSink.commitIndexed(rows(0, 40).repartition(2, col("e")), dual, Seq("day"), sk)
+    val e1 = intercept[IllegalArgumentException](
+      SnapshotSink.appendWithStats(rows(40, 60), dual, Seq("day")))
+    assert(e1.getMessage.contains("setKeys"))
+    // a plain append onto an indexed lineage is refused the same way
+    val e2 = intercept[IllegalArgumentException](SnapshotSink.append(rows(40, 60), dual))
+    assert(e2.getMessage.contains("statsCols"))
+    // nothing was committed by the refused ops; the full form still extends it
+    assert(SnapshotSink.versions(spark, dual) == Seq(1))
+    val s2 = SnapshotSink.appendIndexed(rows(40, 60), dual, Seq("day"), sk)
+    assert(s2.version == 2 && s2.rows == 60L)
+    assert(SnapshotSink.readSetPruned(spark, dual, graft.plans.PortableSketch.md5Long(
+      "5".getBytes(java.nio.charset.StandardCharsets.UTF_8))).df.filter(col("e") === 5L).count() == 10L)
+    // a lineage without a set index cannot be given one by a maintenance op
+    val statsOnly = tmpRoot()
+    SnapshotSink.commitWithStats(rows(0, 40).repartitionByRange(2, col("day")), statsOnly, Seq("day"))
+    val e3 = intercept[IllegalArgumentException](
+      SnapshotSink.expireBelow(spark, statsOnly, "day", 10L, Seq("day"), setKeys = sk))
+    assert(e3.getMessage.contains("no set index"))
+    assert(SnapshotSink.versions(spark, statsOnly) == Seq(1))
+  }
+
   test("expireBelow: whole files drop from the manifest with zero I/O; only the boundary file rewrites") {
     import org.apache.spark.sql.functions._
     val root = tmpRoot()

@@ -427,6 +427,53 @@ class StreamingSpec extends AnyFunSuite {
     assert(fromStore.nonEmpty)
   }
 
+  test("state rollup replay guard: a replayed micro-batch id is skipped, so count-min states are not double-counted") {
+    import org.apache.spark.sql.functions.col
+    import graft.operators.CountMin
+    import graft.sink.SnapshotSink
+
+    val src = Files.createTempDirectory("graft_stream_replay")
+    val ckp = Files.createTempDirectory("graft_stream_replay_ckp")
+    val root = Files.createTempDirectory("graft_stream_replay_root").toString
+    Files.write(src.resolve("a.json"),
+      (0 until 30).map(i => s"""{"day":${1 + i % 3},"v":"u${i % 5}"}""")
+        .mkString("\n").getBytes(StandardCharsets.UTF_8))
+    Files.write(src.resolve("b.json"),
+      (0 until 30).map(i => s"""{"day":${1 + i % 3},"v":"u${i % 7}"}""")
+        .mkString("\n").getBytes(StandardCharsets.UTF_8))
+    val schema = spark.read.json(src.toString).schema
+    def run() = {
+      val q = graft.streaming.StateRollup.appendDailyCmStates(
+        spark.readStream.schema(schema).option("maxFilesPerTrigger", "1")
+          .json(src.toString),
+        "v", "day", depth = 4, width = 64, root = root, checkpointDir = ckp.toString)
+      q.awaitTermination(120000)
+      q
+    }
+    def m(df: org.apache.spark.sql.DataFrame) = df.collect()
+      .map(r => (r.getLong(0), r.getInt(1), r.getLong(2)) -> r.getLong(3)).toMap
+    run()
+    assert(SnapshotSink.versions(spark, root) == Seq(1, 2))
+    val single = m(SnapshotSink.read(spark, root))
+
+    // as if the process died after the commit but before Spark recorded
+    // the batch: drop the checkpoint's last commit entry, so the restarted
+    // query re-runs that batch id over the same offsets
+    val commits = ckp.resolve("commits")
+    val last = commits.toFile.list().filter(_.matches("\\d+")).map(_.toLong).max
+    Files.delete(commits.resolve(last.toString))
+    Files.deleteIfExists(commits.resolve(s".$last.crc"))
+    val replay = run()
+    assert(replay.recentProgress.exists(_.batchId == last)) // the batch did re-run
+    // the marker skipped it: no new version, and CM's additive merge did
+    // not count the batch twice
+    assert(SnapshotSink.versions(spark, root) == Seq(1, 2))
+    assert(m(SnapshotSink.read(spark, root)) == single)
+    val all = spark.read.json(src.toString).filter(col("v").isNotNull)
+      .select(col("day").as("d"), col("v").cast("string").as("v"))
+    assert(single == m(CountMin.dailyStates(all, "v", "d", 4, 64)))
+  }
+
   test("streaming state rollup retires old versions as it ingests (keepVersions)") {
     import graft.operators.Cardinality
     import graft.sink.SnapshotSink
