@@ -1,8 +1,10 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.HashPartitioner
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
 /** GRAPH CENTRALITY over a weighted edge table — INTEGER-EXACT
   * PageRank: ranks live in micro-units (longs), each edge's
@@ -19,13 +21,18 @@ import org.apache.spark.sql.functions._
   * Dangling mass (nodes with no out-edges) redistributes uniformly, the
   * classic correction, also in integer arithmetic.
   *
-  * Scale shape: the loop is |E|-sized joins on the node key with
-  * map-side-combined integer sums — the CC/star-contraction shape (one
-  * shuffle per iteration, `localCheckpoint` truncating lineage each
-  * round). The only driver-side scalar is the node count, computed once
-  * before the loop; the per-round dangling mass rides along as a 1-row
-  * crossJoin column, so each round submits exactly ONE job (the eager
-  * checkpoint) — iteration cost is data-bound, not job-launch-bound. */
+  * Scale shape: the edge list is checkpointed once, then the rounds run
+  * as ONE lazy RDD lineage — the PageRank loop of the RDD paper (Zaharia
+  * et al., NSDI 2012). Edges keyed by src and the node universe share
+  * one `HashPartitioner`, sized by the checkpointed edge frame's
+  * partition count (what AQE coalesced it to), so each round's
+  * edges ⋈ ranks join is narrow: a round is one map-side-combined
+  * integer sum of the contributions by dst plus one all-reduce of the
+  * dangling mass (|partitions|² longs). No round runs an action, a
+  * checkpoint or a Catalyst plan: before the caller's action only the
+  * edge checkpoint and one node count run, and that action runs every
+  * round in one job. Per-round cost is data-bound, not
+  * job-launch-bound, at every graph size. */
 object Graph {
 
   /** `(node, pr_micros, out_degree, in_degree)` after `iterations`
@@ -41,10 +48,16 @@ object Graph {
     * (100·|seeds|)`-style divisions are integer; with all nodes as
     * seeds the arithmetic reduces to the uniform case exactly.
     *
+    * Node ids need value equality (an atomic, non-binary type): RDD
+    * hashing compares `Array[Byte]` keys by reference. Null ids keep the
+    * SQL join semantics: a null node holds rank but sends none along its
+    * edges, and is left out of the report.
+    *
     * Exactness envelope: `pr · dampingPct · w` must stay below 2^63
-    * (holds whenever max pr ≈ 1e6·hubshare and weights are bounded;
-    * ANSI mode throws loudly, never wraps, if a graph exceeds it —
-    * rescale weights down in that case). */
+    * (holds whenever max pr ≈ 1e6·hubshare and weights are bounded).
+    * Every multiply and add is `Math.multiplyExact` / `Math.addExact`, so
+    * a graph past it throws `ArithmeticException`, never wraps — rescale
+    * weights down in that case. */
   def pageRank(
       edges: DataFrame,
       srcCol: String,
@@ -56,94 +69,83 @@ object Graph {
   ): DataFrame = {
     require(iterations >= 1 && iterations <= 100, "iterations in [1,100]")
     require(dampingPct > 0 && dampingPct < 100, "dampingPct in (1,99)")
-    // hash(src) partitioning, pinned once: the edge list shuffles ONCE
-    // for the whole run, not once per iteration
-    val e = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"),
-        col(weightCol).cast("long").as("w"))
+    for (c <- Seq(srcCol, dstCol)) require(edges.schema(c).dataType match {
+        case _: StringType | _: NumericType | BooleanType | DateType |
+            TimestampType | TimestampNTZType => true
+        case _ => false // binary, nested, interval, variant, null
+      }, s"node column $c must have an atomic, non-binary type with value " +
+        s"equality, not ${edges.schema(c).dataType.simpleString}")
+    // src and dst share the type SQL's union would widen them to
+    val nodeType = edges.select(col(srcCol).as("n"))
+      .union(edges.select(col(dstCol).as("n"))).schema.head.dataType
+    def node(c: String) = col(c).cast(nodeType)
+    def isSeed(c: String) =
+      if (seeds.isEmpty) lit(false) else coalesce(col(c).isin(seeds: _*), lit(false))
+    // checkpointed once; AQE has already coalesced its partitions, and
+    // that count (never the raw shuffle-partition setting) sizes the one
+    // partitioner every keyed RDD of the run shares
+    val rows = edges.select(node(srcCol), node(dstCol),
+        col(weightCol).cast("long").as("w"), isSeed(srcCol), isSeed(dstCol))
       .filter(col("w") > 0)
-      .repartition(col("src"))
-      .localCheckpoint(true) // reused every iteration
-    // ONE node-universe aggregate builds every static per-node fact the
-    // run needs (r17, guide §2.3/§2.4: the previous shape kept separate
-    // nodes/outTotals/outDeg/inDeg frames and re-joined two of them
-    // EVERY round — two joins per round whose AQE stage materializations
-    // dominated wall time at node-sized data; 104 scheduler jobs for
-    // 0.6 s of task work on q107): out_total (null = dangling, the old
-    // left_anti outTotals test), plus the final report's degrees.
-    val info = e.select(col("src").as("node"), col("w"),
-        lit(true).as("is_src"))
-      .unionByName(e.select(col("dst").as("node"),
-        lit(null).cast("long").as("w"), lit(false).as("is_src")))
-      .groupBy("node")
-      .agg(sum(when(col("is_src"), col("w"))).as("out_total"),
-        count(when(col("is_src"), lit(1))).as("out_degree"),
-        count(when(!col("is_src"), lit(1))).as("in_degree"))
-      .localCheckpoint(true)
-    val n = info.count()
+      .localCheckpoint(true).rdd
+    val part = new HashPartitioner(math.max(1, rows.getNumPartitions))
+    // node -> (out_total, out_degree, in_degree, is_seed); out_total 0 is
+    // dangling (every kept weight is positive)
+    type Node = (Long, Long, Long, Boolean)
+    val nodes = rows.flatMap(r => Seq(r.get(0) -> ((r.getLong(2), 1L, 0L, r.getBoolean(3))),
+        r.get(1) -> ((0L, 0L, 1L, r.getBoolean(4)))))
+      .reduceByKey(part, (a, b) => (Math.addExact(a._1, b._1), a._2 + b._2,
+        a._3 + b._3, a._4 || b._4))
+    // the one action before the caller's: node count and seeds found
+    val (n, present) = nodes.values.map(v => (1L, if (v._4) 1L else 0L))
+      .fold((0L, 0L))((a, b) => (a._1 + b._1, a._2 + b._2))
     require(n > 0, "empty graph")
-    if (seeds.nonEmpty) {
-      val present = info.filter(col("node").isin(seeds: _*)).count()
-      require(present == seeds.distinct.size,
-        s"every seed must be a graph node (${seeds.distinct.size} seeds, $present found)")
-    }
     val k = seeds.distinct.size.toLong
+    require(k == 0 || present == k,
+      s"every seed must be a graph node ($k seeds, $present found)")
 
-    // the rank frame CARRIES out_total, so a round needs no join against
-    // any static frame: contributions come off the one e⋈pr join, and
-    // the node universe re-enters through a zero-contribution union
-    // branch folded into the SAME map-side-combined aggregate that sums
-    // contributions — the old `nodes LEFT JOIN contribs` (one exchange +
-    // one join per round) becomes one grouped aggregate (one exchange).
-    // Integer identity: in_sum per node is the sum of the identical
-    // integer contributions plus an explicit 0 — bit-equal to the old
-    // coalesce(in_sum, 0); dangling is the same Σ pr over nodes with
-    // NULL out_total (≡ the old left_anti on outTotals).
-    var pr = info.select(col("node"), lit(1000000L).as("pr_micros"),
-      col("out_total")) // zero-job init: a projection of checkpointed info
-    var i = 0
-    while (i < iterations) {
-      // dangling mass: a 1-row aggregate carried INTO the update as a
-      // scalar crossJoin column (the adjudicated q84 pattern) instead of
-      // a per-round driver `head()`. The integer identity is preserved
-      // exactly: dangling >= 0, so SQL's flooring DIV and driver-side
-      // truncating Long division agree.
-      val danglingDf = pr.filter(col("out_total").isNull)
-        .agg(coalesce(sum(col("pr_micros")), lit(0L)).as("_dangling"))
-      val base: Column =
-        if (seeds.isEmpty)
-          lit((100L - dampingPct) * 1000000L / 100L) +
-            expr(s"$dampingPct * _dangling DIV (100 * ${n}L)")
-        else
-          when(col("node").isin(seeds: _*),
-            lit((100L - dampingPct) * 1000000L * n / (100L * k)) +
-              expr(s"$dampingPct * _dangling DIV (100 * ${k}L)"))
-            .otherwise(lit(0L))
-      pr = e.join(pr, e("src") === pr("node"))
-        .select(col("dst").as("node"),
-          expr(s"pr_micros * $dampingPct * w DIV (100 * out_total)").as("c"),
-          lit(null).cast("long").as("ot"))
-        .unionByName(info.select(col("node"), lit(0L).as("c"),
-          col("out_total").as("ot")))
-        .groupBy("node")
-        .agg(sum(col("c")).as("in_sum"), max(col("ot")).as("out_total"))
-        .crossJoin(danglingDf) // 1-row scalar
-        .select(col("node"), (base + col("in_sum")).as("pr_micros"),
-          col("out_total"))
-        .localCheckpoint(true) // EAGER, deliberately: the round-9 lazy
-        // variant (zero jobs, one deferred materialization) was faster
-        // isolated (1.8 s vs 3.0 s) but fragile — in the driver's full
-        // 301-query session the single deep deferred chain read 14.1 s
-        // min-of-2 (~4.5× the eager shape) under accumulated JVM/
-        // session state, both interleaved passes. A fixed per-round job
-        // whose cost is bounded by the node frame is the shape that
-        // holds regardless of session history; at real scale the
-        // per-round data cost dwarfs the scheduler overhead anyway
-      i += 1
+    // base = teleport + d·dangling DIV (100·share), on every node
+    // (uniform) or on the seeds only (personalized); all operands are
+    // non-negative, so Long division is SQL's flooring DIV
+    val d = dampingPct.toLong
+    val (teleport, share) =
+      if (k == 0) ((100L - d) * 1000000L / 100L, n)
+      else (Math.multiplyExact((100L - d) * 1000000L, n) / (100L * k), k)
+    val divisor = Math.multiplyExact(100L, share)
+    val out = rows.map(r => r.get(0) -> ((r.get(1), r.getLong(2))))
+      .filter(_._1 != null) // SQL: a null src joins no rank
+      .partitionBy(part)
+    var ranks = nodes.mapValues(v => (1000000L, v))
+    for (_ <- 1 to iterations) {
+      // each partition's dangling partial goes to every partition, which
+      // sums them: key p lands in partition p under `part`
+      val dangling = ranks.mapPartitions { it =>
+          val s = it.foldLeft(0L)((acc, r) =>
+            if (r._2._2._1 == 0L) Math.addExact(acc, r._2._1) else acc)
+          Iterator.range(0, part.numPartitions).map(_ -> s)
+        }.reduceByKey(part, (a: Long, b: Long) => Math.addExact(a, b))
+      // edges ⋈ ranks is narrow (one partitioner): every node sends its
+      // contributions by dst plus a zero to itself, which carries its
+      // static facts and keeps it in the universe; one integer sum by key
+      val sums = out.cogroup(ranks, part).flatMap { case (src, (adj, rank)) =>
+          rank.flatMap { case (pr, v) => Iterator(src -> ((0L, v))) ++ adj.map {
+            case (dst, w) => dst -> ((Math.multiplyExact(Math.multiplyExact(pr, d), w) /
+              Math.multiplyExact(100L, v._1), null: Node)) } } }
+        .reduceByKey(part, (a, b) => (Math.addExact(a._1, b._1),
+          if (a._2 == null) b._2 else a._2))
+      ranks = sums.zipPartitions(dangling, preservesPartitioning = true) { (it, dg) =>
+        val base = Math.addExact(teleport,
+          Math.multiplyExact(d, dg.next()._2) / divisor)
+        it.map { case (key, (in, v)) =>
+          key -> ((Math.addExact(if (k > 0 && !v._4) 0L else base, in), v)) }
+      }
     }
-    pr.join(info.select(col("node"), col("out_degree"), col("in_degree")),
-        Seq("node")) // info covers every node: inner ≡ the old left+coalesce
-      .select(col("node"), col("pr_micros"), col("out_degree"),
-        col("in_degree"))
+    val schema = StructType(Seq(StructField("node", nodeType),
+      StructField("pr_micros", LongType, nullable = false),
+      StructField("out_degree", LongType, nullable = false),
+      StructField("in_degree", LongType, nullable = false)))
+    edges.sparkSession.createDataFrame(ranks.flatMap { case (key, (pr, v)) =>
+      Option(key).map(Row(_, pr, v._2, v._3)) }, schema)
   }
 
   /** TRIANGLE COUNT + GLOBAL CLUSTERING COEFFICIENT via the
@@ -318,7 +320,7 @@ object Graph {
     * this run-to-fixpoint loop whenever convergence happens within the
     * unroll budget).
     *
-    * Scale shape (the [[pageRank]] discipline): each round is one
+    * Scale shape: each round is one
     * map-side-combined degree aggregate plus two anti-joins of the
     * edge list against the (usually tiny, AQE-broadcast) sub-k node
     * set, with a `localCheckpoint` per round pinning plan depth
@@ -413,7 +415,7 @@ object Graph {
     * a node-sized label frame, a map-side-combined (node, label) weight
     * sum, and a per-node top-1 window on the label-deduped frame —
     * never a per-row window over raw edges. `localCheckpoint` pins plan
-    * depth constant per phase (the [[pageRank]] discipline).
+    * depth constant per phase.
     *
     * @return (node, community) for every endpoint of `edges`, both sides
     */

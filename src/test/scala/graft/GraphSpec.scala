@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.functions.col
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.Graph
@@ -105,6 +106,128 @@ class GraphSpec extends AnyFunSuite {
     intercept[IllegalArgumentException](
       Graph.pageRank(Seq(("a", "b", 0L)).toDF("src", "dst", "w"),
         "src", "dst", "w"))
+  }
+
+  test("exactness envelope: a weight past pr·85·w < 2^63 raises ArithmeticException") {
+    // 1e6 · 85 · w > 2^63 on the first round's only contribution
+    val e = Seq(("a", "b", Long.MaxValue / 1000)).toDF("src", "dst", "w")
+    val err = intercept[Exception](
+      Graph.pageRank(e, "src", "dst", "w", iterations = 1).collect())
+    assert(Iterator.iterate[Throwable](err)(_.getCause).takeWhile(_ != null)
+      .exists(_.isInstanceOf[ArithmeticException]), err)
+  }
+
+  test("node keys: a binary node column is rejected by name") {
+    val e = Seq((Array[Byte](1), Array[Byte](2), 1L)).toDF("from_bytes", "dst", "w")
+    val err = intercept[IllegalArgumentException](
+      Graph.pageRank(e, "from_bytes", "dst", "w"))
+    assert(err.getMessage.contains("from_bytes"))
+  }
+
+  test("node keys: Long ids rank exactly as the same graph with String ids") {
+    val es = Seq((1L, 2L, 3L), (2L, 3L, 1L), (3L, 1L, 2L), (1L, 4L, 1L),
+      (3L, 3L, 1L))
+    val longs = Graph.pageRank(es.toDF("src", "dst", "w"), "src", "dst", "w")
+      .collect().map(r => r.getLong(0).toString ->
+        ((r.getLong(1), r.getLong(2), r.getLong(3)))).toMap
+    assert(longs == pr(es.map { case (a, b, w) => (a.toString, b.toString, w) }, 10))
+  }
+
+  test("node keys: a null id keeps SQL join semantics") {
+    // n = 3 and nothing dangles. The null src joins no rank, so a gets
+    // only the base 150000; b -> null still carries 850000 to the null
+    // node, which is left out of the report
+    val e = Seq(("a", "b", 1L), (null, "a", 1L), ("b", null, 1L))
+      .toDF("src", "dst", "w")
+    val got = Graph.pageRank(e, "src", "dst", "w", iterations = 1).collect()
+      .map(r => r.getString(0) -> ((r.getLong(1), r.getLong(2), r.getLong(3)))).toMap
+    assert(got == Map("a" -> ((150000L, 1L, 1L)), "b" -> ((1000000L, 1L, 1L))))
+  }
+
+  test("one lineage: 10 rounds submit as many jobs as 1, and no stage " +
+      "runs more tasks than the edge frame has partitions") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    // three range slices and no exchange: the checkpointed edge frame
+    // keeps exactly 3 partitions, against 200 shuffle partitions
+    val edges = spark.range(0, 60, 1, 3).select((col("id") % 7).as("src"),
+      ((col("id") * 3 + 1) % 9).as("dst"), (col("id") % 4 + 1).as("w"))
+    val sc = spark.sparkContext
+    def profile(iters: Int): (Int, Int) = {
+      val group = "graph-spec-pagerank-" + System.nanoTime()
+      val tasks = new java.util.concurrent.ConcurrentLinkedQueue[Int]()
+      val listener = new SparkListener {
+        override def onJobStart(e: SparkListenerJobStart): Unit =
+          if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group))
+            tasks.add(e.stageInfos.map(_.numTasks).max)
+      }
+      sc.addSparkListener(listener)
+      try {
+        sc.setJobGroup(group, "pageRank job count")
+        Graph.pageRank(edges, "src", "dst", "w", iterations = iters).collect()
+      } finally {
+        sc.clearJobGroup()
+        Thread.sleep(500) // let the bus deliver the last job starts
+        sc.removeSparkListener(listener)
+      }
+      (tasks.size, tasks.toArray.map(_.asInstanceOf[Int]).max)
+    }
+    val shuffle = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", "200")
+    try {
+      val (jobs1, tasks1) = profile(1)
+      val (jobs10, tasks10) = profile(10)
+      assert(jobs10 == jobs1, s"$jobs1 jobs at 1 round, $jobs10 at 10")
+      assert(tasks1 <= 3 && tasks10 <= 3, s"$tasks1 / $tasks10 tasks in a stage")
+    } finally spark.conf.set("spark.sql.shuffle.partitions", shuffle)
+  }
+
+  /** The integer recurrence in plain Scala, written from its definition:
+    * node -> (pr_micros, out_degree, in_degree). */
+  private def referencePr(edges: Seq[(Int, Int, Long)], iters: Int,
+                          seeds: Set[Int]): Map[Int, (Long, Long, Long)] = {
+    val es = edges.filter(_._3 > 0)
+    val nodes = es.flatMap(e => Seq(e._1, e._2)).distinct
+    val outTotal = es.groupMapReduce(_._1)(_._3)(_ + _)
+    val (n, k) = (nodes.size.toLong, seeds.size.toLong)
+    var rank = nodes.map(_ -> 1000000L).toMap
+    for (_ <- 1 to iters) {
+      val dangling = nodes.filterNot(outTotal.contains).map(rank).sum
+      val in = es.groupMapReduce(_._2)(e =>
+        rank(e._1) * 85 * e._3 / (100 * outTotal(e._1)))(_ + _)
+      rank = nodes.map { v =>
+        val base =
+          if (k == 0) 15L * 1000000L / 100 + 85 * dangling / (100 * n)
+          else if (seeds(v)) 15L * 1000000L * n / (100 * k) + 85 * dangling / (100 * k)
+          else 0L
+        v -> (base + in.getOrElse(v, 0L))
+      }.toMap
+    }
+    nodes.map(v => v -> ((rank(v), es.count(_._1 == v).toLong,
+      es.count(_._2 == v).toLong))).toMap
+  }
+
+  test("property: the operator equals a plain-Scala integer recurrence " +
+      "on random graphs, uniform and personalized, at 1, 2 and 10 rounds") {
+    val rnd = new scala.util.Random(20261019L)
+    for (g <- 1 to 3) {
+      val m = 4 + rnd.nextInt(8)
+      // random arcs with self-loops, parallel edges and some zero weights;
+      // node m is a sink (dangling), node m + 1 only ever has w = 0 arcs
+      val es = Seq.fill(3 * m)((rnd.nextInt(m), rnd.nextInt(m), rnd.nextInt(5).toLong)) ++
+        Seq((0, 0, 2L), (0, 0, 1L), (1, m, 3L), (2, m, 1L), (m + 1, 1, 0L))
+      val df = es.toDF("src", "dst", "w")
+      val present = es.filter(_._3 > 0).flatMap(e => Seq(e._1, e._2)).distinct
+      val seedSets = Seq(Set.empty[Int],
+        rnd.shuffle(present).take(1 + rnd.nextInt(present.size)).toSet)
+      for (seeds <- seedSets; iters <- Seq(1, 2, 10)) {
+        val got = Graph.pageRank(df, "src", "dst", "w", iterations = iters,
+            seeds = seeds.toSeq)
+          .collect().map(r => r.getInt(0) ->
+            ((r.getLong(1), r.getLong(2), r.getLong(3)))).toMap
+        assert(got == referencePr(es, iters, seeds),
+          s"graph $g, seeds $seeds, $iters rounds")
+      }
+    }
   }
 
   test("triangles: complete graphs hit transitivity 1, paths and stars 0") {
