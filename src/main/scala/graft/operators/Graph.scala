@@ -1,6 +1,9 @@
 package graft.operators
 
+import scala.collection.mutable
+
 import org.apache.spark.HashPartitioner
+import org.apache.spark.rdd.{RDD, ShuffledRDD}
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -149,68 +152,123 @@ object Graph {
   }
 
   /** TRIANGLE COUNT + GLOBAL CLUSTERING COEFFICIENT via the
-    * degree-oriented join — the standard distributed shape (Suri &
-    * Vassilvitskii's "last reducer" fix): orient every undirected edge
-    * from its (degree, id)-smaller endpoint, so each triangle is
-    * counted EXACTLY once and the wedge-join fan-out per node is its
+    * degree-oriented intersection — the standard distributed shape (Suri
+    * & Vassilvitskii's "last reducer" fix, WWW 2011): orient every
+    * undirected edge from its (degree, id)-smaller endpoint, so each
+    * triangle is counted EXACTLY once and a node's list work is its
     * OUT-degree, bounded by O(√m) under this orientation — a hub with
     * degree 10⁶ contributes ~√m wedges instead of 10¹².
     *
-    * Input: distinct undirected edges as (srcCol < dstCol) pairs (the
-    * operator re-normalizes and dedups defensively — a duplicate edge
-    * would inflate every count downstream). Output is ONE row:
+    * Input: undirected edges over integral node columns (widened to
+    * bigint). The operator normalizes every edge to (least, greatest)
+    * and dedups: duplicate and reversed edges count once, and self-loops
+    * and edges with a null endpoint are dropped. Output is ONE row:
     * n_nodes, n_edges, n_wedges (Σ deg·(deg−1)/2), n_triangles, and
-    * transitivity_pm = 10⁴·3·triangles DIV wedges — all exact integers.
-    */
+    * transitivity_pm = 10⁴·3·triangles DIV wedges — all exact integers
+    * (every sum through `Math.addExact`). An empty graph reads
+    * (0, NULL, NULL, 0, 0), the SQL aggregates' empty-input row.
+    *
+    * Scale shape: one lazy RDD lineage with no persist or checkpoint,
+    * the co-partitioned template of [[pageRank]]. One `HashPartitioner`,
+    * sized `max(input partitions after AQE, defaultParallelism)`, keys
+    * two shuffles of primitive (Long, Array[Long]) records:
+    *  1. every edge both ways, keyed by endpoint: each node's sorted,
+    *     distinct neighbour list (this dedups the edges);
+    *  2. each node sends (its degree, its id) to each neighbour: a node's
+    *     degree is the number of messages it receives, and its out-list
+    *     is the neighbours ranked above it by (degree, id).
+    * The out-lists (m longs in all) are collected once and broadcast;
+    * one pass over them then sums, per oriented edge (s, t), the
+    * sorted-merge count |N⁺(s) ∩ N⁺(t)| — each triangle a→b→c lands
+    * exactly once, at (a, b) — with n_nodes, Σd and Σ C(d,2) in the same
+    * fold. Before the caller's action only the input's AQE stages and
+    * the out-list collect run; the action runs the intersection pass. */
   def triangleStats(edges: DataFrame, srcCol: String, dstCol: String): DataFrame = {
-    val e = edges.select(
-        least(col(srcCol), col(dstCol)).as("u"),
-        greatest(col(srcCol), col(dstCol)).as("v"))
-      .filter(col("u") < col("v")).distinct()
-      .localCheckpoint(true) // degrees + orientation + closure, one build
-    val deg = e.select(col("u").as("n")).unionAll(e.select(col("v").as("n")))
-      .groupBy("n").agg(count(lit(1)).as("d"))
-    // orient from the (degree, id)-smaller endpoint
-    val oriented = e
-      .join(deg.select(col("n").as("u"), col("d").as("du")), "u")
-      .join(deg.select(col("n").as("v"), col("d").as("dv")), "v")
-      .select(
-        when(struct(col("du"), col("u")) < struct(col("dv"), col("v")),
-          struct(col("u").as("s"), col("v").as("t")))
-          .otherwise(struct(col("v").as("s"), col("u").as("t"))).as("o"))
-      .select(col("o.s").as("s"), col("o.t").as("t"))
-      .localCheckpoint(true) // joined three ways below
-    // closure by ADJACENCY INTERSECTION instead of wedge expansion:
-    // for each oriented edge (u, v), triangles through it = |N⁺(u) ∩
-    // N⁺(v)| — each triangle a→b→c lands exactly once, at edge (a, b),
-    // via their common out-neighbor c. This never materializes the
-    // Σ indeg·outdeg wedge frame (147.8M rows at sf0.1); the work is
-    // Σ_edges (deg⁺(u) + deg⁺(v)) element comparisons inside one
-    // map-side join row per EDGE. The adjacency table is |V| rows
-    // holding m longs total — broadcast (a 1.2M-edge graph ≈ 10 MB);
-    // beyond broadcast size drop the hint and it shuffle-joins on the
-    // edge key, still edge-frame-sized.
-    val adj = oriented.groupBy(col("s"))
-      .agg(sort_array(collect_list(col("t"))).as("nbrs"))
-    val tri = oriented
-      .join(broadcast(adj.select(col("s"), col("nbrs").as("_nu"))), Seq("s"), "left")
-      .join(broadcast(adj.select(col("s").as("t"), col("nbrs").as("_nv"))), Seq("t"), "left")
-      // fused sorted-merge count (r16): the lists are sorted-unique, so
-      // this equals size(array_intersect(...)) with no per-row hash set,
-      // boxing, or materialized intersection array
-      .select(graft.plans.SketchFunctions.sortedIntersectCount(
-        coalesce(col("_nu"), expr("CAST(array() AS array<bigint>)")),
-        coalesce(col("_nv"), expr("CAST(array() AS array<bigint>)"))).as("_c"))
-      .agg(coalesce(sum(col("_c")), lit(0L)).as("n_triangles"))
-    val stats = deg.agg(
-      count(lit(1)).as("n_nodes"),
-      expr("sum(d) DIV 2").as("n_edges"),
-      sum(expr("d * (d - 1) DIV 2")).as("n_wedges"))
-    stats.crossJoin(tri) // 1-row x 1-row
-      .withColumn("transitivity_pm",
-        when(col("n_wedges") > 0,
-          expr("3 * CAST(n_triangles AS DECIMAL(38,0)) * 10000 DIV n_wedges"))
-          .otherwise(0L))
+    for (c <- Seq(srcCol, dstCol)) require(edges.schema(c).dataType match {
+        case ByteType | ShortType | IntegerType | LongType => true
+        case _ => false
+      }, s"node column $c must be integral (widened to bigint), not " +
+        edges.schema(c).dataType.simpleString)
+    val (u, v) = (col(srcCol).cast(LongType), col(dstCol).cast(LongType))
+    // least/greatest skip nulls, so a null endpoint gives u = v and the
+    // filter drops it with the self-loops; AQE runs the input's stages here
+    val arcs = edges.select(least(u, v).as("u"), greatest(u, v).as("v"))
+      .filter(col("u") < col("v")).rdd
+    val sc = edges.sparkSession.sparkContext
+    val part = new HashPartitioner(math.max(arcs.getNumPartitions, sc.defaultParallelism))
+    val adjacency = gatherByKey(arcs.flatMap { r =>
+        Iterator(r.getLong(0) -> Array(r.getLong(1)), r.getLong(1) -> Array(r.getLong(0)))
+      }, part).mapValues(sortedDistinct)
+    // (s, degree, out-list sorted by id)
+    val oriented = gatherByKey(adjacency.flatMap { case (s, ns) =>
+        ns.iterator.map(_ -> Array(ns.length.toLong, s)) }, part)
+      .map { case (s, msgs) =>
+        val d = msgs.length / 2L
+        val out = Iterator.range(0, msgs.length, 2)
+          .filter(i => msgs(i) > d || msgs(i) == d && msgs(i + 1) > s)
+          .map(i => msgs(i + 1)).toArray
+        java.util.Arrays.sort(out)
+        (s, d, out)
+      }
+    val outOf = sc.broadcast(mutable.LongMap.from(oriented.map(o => o._1 -> o._3).collect()))
+    // (n_nodes, Σd, Σ C(d,2), triangles) per partition, summed in one task
+    val sums = oriented.mapPartitions { it =>
+        val lists = outOf.value
+        val acc = Array(0L, 0L, 0L, 0L)
+        it.foreach { case (_, d, out) =>
+          addTo(acc, Array(1L, d, Math.multiplyExact(d, d - 1L) / 2L,
+            out.foldLeft(0L)((n, t) => Math.addExact(n, sortedIntersectCount(out, lists(t))))))
+        }
+        Iterator(acc)
+      }.repartition(1).mapPartitions { it =>
+        val Array(n, sumD, wedges, tri) = it.foldLeft(Array(0L, 0L, 0L, 0L))(addTo)
+        Iterator(if (n == 0L) Row(0L, null, null, 0L, 0L) else Row(n, sumD / 2L, wedges, tri,
+          if (wedges > 0L) (BigInt(3L * 10000L) * tri / wedges).toLong else 0L))
+      }
+    edges.sparkSession.createDataFrame(sums, StructType(Seq(
+      StructField("n_nodes", LongType, nullable = false),
+      StructField("n_edges", LongType),
+      StructField("n_wedges", LongType),
+      StructField("n_triangles", LongType, nullable = false),
+      StructField("transitivity_pm", LongType))))
+  }
+
+  /** `records` hash-partitioned by key, every key's values gathered into
+    * one array on both sides of the shuffle: a map task writes one
+    * primitive (Long, Array[Long]) record per key it holds. */
+  private def gatherByKey(records: RDD[(Long, Array[Long])],
+      part: HashPartitioner): RDD[(Long, Array[Long])] =
+    new ShuffledRDD[Long, Array[Long], Array[Long]](records.mapPartitions(gather), part)
+      .mapPartitions(gather, preservesPartitioning = true)
+
+  private def gather(it: Iterator[(Long, Array[Long])]): Iterator[(Long, Array[Long])] = {
+    val acc = mutable.LongMap.empty[mutable.ArrayBuilder.ofLong]
+    it.foreach { case (k, vs) => acc.getOrElseUpdate(k, new mutable.ArrayBuilder.ofLong) ++= vs }
+    acc.iterator.map { case (k, b) => k -> b.result() }
+  }
+
+  private def sortedDistinct(xs: Array[Long]): Array[Long] = {
+    java.util.Arrays.sort(xs)
+    var n = 0
+    for (x <- xs) if (n == 0 || xs(n - 1) != x) { xs(n) = x; n += 1 }
+    java.util.Arrays.copyOf(xs, n)
+  }
+
+  /** |a ∩ b| of two ascending, duplicate-free arrays, by one merge walk. */
+  private def sortedIntersectCount(a: Array[Long], b: Array[Long]): Long = {
+    var (i, j, c) = (0, 0, 0L)
+    while (i < a.length && j < b.length) {
+      if (a(i) < b(j)) i += 1
+      else if (a(i) > b(j)) j += 1
+      else { c += 1L; i += 1; j += 1 }
+    }
+    c
+  }
+
+  /** Adds `b` into `a` element-wise, exactly; returns `a`. */
+  private def addTo(a: Array[Long], b: Array[Long]): Array[Long] = {
+    for (i <- a.indices) a(i) = Math.addExact(a(i), b(i))
+    a
   }
 
   /** DEGREE-CAPPED TRIANGLE CENSUS — [[triangleStats]]'s scale path
@@ -272,10 +330,12 @@ object Graph {
       .join(adj.select(col("s"), col("nbrs").as("_nu")), Seq("s"), "left")
       .join(adj.select(col("s").as("t"), col("nbrs").as("_nv")), Seq("t"), "left")
       // fused sorted-merge count (r16): equals size(array_intersect(...))
-      // on these sorted-unique bounded lists — see triangleStats
+      // on these sorted-unique bounded lists; a node with no kept arcs
+      // reads as the empty list, whose elements are non-null like
+      // collect_list's
       .select(graft.plans.SketchFunctions.sortedIntersectCount(
-        coalesce(col("_nu"), expr("CAST(array() AS array<bigint>)")),
-        coalesce(col("_nv"), expr("CAST(array() AS array<bigint>)"))).as("_c"))
+        coalesce(col("_nu"), typedLit(Array.empty[Long])),
+        coalesce(col("_nv"), typedLit(Array.empty[Long]))).as("_c"))
       .agg(coalesce(sum(col("_c")), lit(0L)).as("n_triangles_capped"))
     val capWedges = lit(maxOut.toLong * (maxOut - 1L) / 2L)
     val census = ranked.groupBy(col("s")).agg(max(col("rn")).cast("long").as("dout"))

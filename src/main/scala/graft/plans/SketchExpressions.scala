@@ -639,10 +639,12 @@ case class BloomMightContain(child: Expression, bloomBytes: Array[Byte])
   *
   * PRECONDITION (every caller's arrays are built this way): both inputs
   * sorted ascending with unique, non-null elements — [[ShingleHashes]] /
-  * [[PortableShingleHashes]] emit sorted-deduped sets, and the triangle
-  * adjacency lists are `sort_array(collect_list(...))` over distinct
-  * arcs. On such inputs the merge count equals
-  * `size(array_intersect(a, b))` exactly. */
+  * [[PortableShingleHashes]] emit sorted-deduped sets, and the capped
+  * triangle adjacency lists are `sort_array(collect_list(...))` over
+  * distinct arcs. On such inputs the merge count equals
+  * `size(array_intersect(a, b))` exactly. Non-null elements are checked
+  * at analysis time: an `array<bigint>` whose type admits null elements
+  * is rejected. Sortedness and uniqueness are the callers' to keep. */
 case class SortedIntersectCount(left: Expression, right: Expression)
     extends BinaryExpression {
 
@@ -651,10 +653,11 @@ case class SortedIntersectCount(left: Expression, right: Expression)
 
   override def checkInputDataTypes(): TypeCheckResult =
     (left.dataType, right.dataType) match {
-      case (ArrayType(LongType, _), ArrayType(LongType, _)) =>
+      case (ArrayType(LongType, false), ArrayType(LongType, false)) =>
         TypeCheckResult.TypeCheckSuccess
       case other => TypeCheckResult.TypeCheckFailure(
-        s"graft_sorted_intersect_count requires two array<bigint> inputs, got $other")
+        "graft_sorted_intersect_count requires two array<bigint> inputs with " +
+          s"non-null elements, got $other")
     }
 
   override def nullSafeEval(l: Any, r: Any): Any = {

@@ -40,7 +40,7 @@ object JoinShapeAudit {
     "q128_leakage_safe_split", "q139_snapshot_time_travel",
     "q161_cuped_readout", "q163_conformal_bounds", "q165_vocab_growth",
     "q166_budget_waterfill", "q170_did_readout", "q174_effect_strength",
-    "q178_triangle_stats", "q181_winsorized_readout", "q183_t_closeness",
+    "q181_winsorized_readout", "q183_t_closeness",
     "q184_ltv_curve", "q185_experiment_dossier", "q187_rater_kappa",
     "q195_loo_valuation", "q196_bh_family", "q200_series_dossier",
     "q201_sequence_match", "q203_conversion_latency", "q205_hill_tail",

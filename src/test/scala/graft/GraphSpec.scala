@@ -144,41 +144,45 @@ class GraphSpec extends AnyFunSuite {
     assert(got == Map("a" -> ((150000L, 1L, 1L)), "b" -> ((1000000L, 1L, 1L))))
   }
 
+  /** (jobs, most tasks in any stage) of the Spark jobs `body` submits
+    * with 200 shuffle partitions. */
+  private def jobProfile(body: => Unit): (Int, Int) = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val group = "graph-spec-" + System.nanoTime()
+    val tasks = new java.util.concurrent.ConcurrentLinkedQueue[Int]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group))
+          tasks.add(e.stageInfos.map(_.numTasks).max)
+    }
+    val shuffle = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", "200")
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "graph spec job count")
+      body
+    } finally {
+      sc.clearJobGroup()
+      Thread.sleep(500) // let the bus deliver the last job starts
+      sc.removeSparkListener(listener)
+      spark.conf.set("spark.sql.shuffle.partitions", shuffle)
+    }
+    (tasks.size, tasks.toArray.map(_.asInstanceOf[Int]).maxOption.getOrElse(0))
+  }
+
   test("one lineage: 10 rounds submit as many jobs as 1, and no stage " +
       "runs more tasks than the edge frame has partitions") {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
     // three range slices and no exchange: the checkpointed edge frame
     // keeps exactly 3 partitions, against 200 shuffle partitions
     val edges = spark.range(0, 60, 1, 3).select((col("id") % 7).as("src"),
       ((col("id") * 3 + 1) % 9).as("dst"), (col("id") % 4 + 1).as("w"))
-    val sc = spark.sparkContext
-    def profile(iters: Int): (Int, Int) = {
-      val group = "graph-spec-pagerank-" + System.nanoTime()
-      val tasks = new java.util.concurrent.ConcurrentLinkedQueue[Int]()
-      val listener = new SparkListener {
-        override def onJobStart(e: SparkListenerJobStart): Unit =
-          if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group))
-            tasks.add(e.stageInfos.map(_.numTasks).max)
-      }
-      sc.addSparkListener(listener)
-      try {
-        sc.setJobGroup(group, "pageRank job count")
-        Graph.pageRank(edges, "src", "dst", "w", iterations = iters).collect()
-      } finally {
-        sc.clearJobGroup()
-        Thread.sleep(500) // let the bus deliver the last job starts
-        sc.removeSparkListener(listener)
-      }
-      (tasks.size, tasks.toArray.map(_.asInstanceOf[Int]).max)
-    }
-    val shuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "200")
-    try {
-      val (jobs1, tasks1) = profile(1)
-      val (jobs10, tasks10) = profile(10)
-      assert(jobs10 == jobs1, s"$jobs1 jobs at 1 round, $jobs10 at 10")
-      assert(tasks1 <= 3 && tasks10 <= 3, s"$tasks1 / $tasks10 tasks in a stage")
-    } finally spark.conf.set("spark.sql.shuffle.partitions", shuffle)
+    def profile(iters: Int): (Int, Int) =
+      jobProfile(Graph.pageRank(edges, "src", "dst", "w", iterations = iters).collect())
+    val (jobs1, tasks1) = profile(1)
+    val (jobs10, tasks10) = profile(10)
+    assert(jobs10 == jobs1, s"$jobs1 jobs at 1 round, $jobs10 at 10")
+    assert(tasks1 <= 3 && tasks10 <= 3, s"$tasks1 / $tasks10 tasks in a stage")
   }
 
   /** The integer recurrence in plain Scala, written from its definition:
@@ -253,6 +257,79 @@ class GraphSpec extends AnyFunSuite {
     val r = Graph.triangleStats(messy.toDF("src", "dst"), "src", "dst")
       .collect().head
     assert(r.getLong(1) == 3L && r.getLong(3) == 1L)
+  }
+
+  /** The census from its definition: every node triple of the
+    * normalized simple graph. */
+  private def referenceTriangles(edges: Seq[(Option[Long], Option[Long])]) = {
+    val es = edges.collect { case (Some(a), Some(b)) if a != b => (a min b, a max b) }.toSet
+    val nodes = es.toSeq.flatMap(e => Seq(e._1, e._2)).distinct.sorted
+    val wedges = nodes.map { n =>
+      val d = es.count(e => e._1 == n || e._2 == n).toLong
+      d * (d - 1) / 2
+    }.sum
+    val tri = nodes.combinations(3).count { case Seq(a, b, c) =>
+      es((a, b)) && es((a, c)) && es((b, c)) }.toLong
+    if (nodes.isEmpty) (0L, None, None, 0L, 0L)
+    else (nodes.size.toLong, Some(es.size.toLong), Some(wedges), tri,
+      if (wedges > 0) 3L * tri * 10000L / wedges else 0L)
+  }
+
+  private def triangleRow(df: org.apache.spark.sql.DataFrame) = {
+    val r = Graph.triangleStats(df, "src", "dst").collect().head
+    def opt(i: Int) = if (r.isNullAt(i)) None else Some(r.getLong(i))
+    (r.getLong(0), opt(1), opt(2), r.getLong(3), r.getLong(4))
+  }
+
+  test("triangles property: the row equals a brute-force census over every " +
+      "node triple on random graphs, the empty graph included") {
+    import org.apache.spark.sql.types.LongType
+    val rnd = new scala.util.Random(20261019L)
+    val graphs = Seq.empty[(Option[Long], Option[Long])] +: (1 to 8).map { _ =>
+      val m = 3 + rnd.nextInt(10)
+      def id = if (rnd.nextInt(10) == 0) None else Some(rnd.nextInt(m).toLong)
+      val es = Seq.fill(3 * m)((id, id)) // self-loops and null endpoints
+      es ++ es.take(m).map(_.swap) ++ es.take(3) // reversed and duplicates
+    }
+    for (es <- graphs) {
+      val df = es.toDF("src", "dst")
+      assert(triangleRow(df) == referenceTriangles(es), es)
+    }
+    assert(triangleRow(graphs.head.toDF("src", "dst")) == ((0L, None, None, 0L, 0L)))
+    val schema = Graph.triangleStats(graphs(1).toDF("src", "dst"), "src", "dst").schema
+    assert(schema.map(f => (f.name, f.dataType, f.nullable)) == Seq(
+      ("n_nodes", LongType, false), ("n_edges", LongType, true),
+      ("n_wedges", LongType, true), ("n_triangles", LongType, false),
+      ("transitivity_pm", LongType, true)))
+  }
+
+  test("triangle keys: Int ids give the same row as Long ids") {
+    val es = Seq((1, 2), (2, 3), (3, 1), (3, 4), (4, 1), (5, 5), (4, 2))
+    assert(triangleRow(es.toDF("src", "dst")) ==
+      triangleRow(es.map { case (a, b) => (a.toLong, b.toLong) }.toDF("src", "dst")))
+    assert(triangleRow(es.toDF("src", "dst")) == ((4L, Some(6L), Some(12L), 4L, 10000L)))
+  }
+
+  test("triangle keys: a string node column is rejected by name") {
+    val e = Seq(("a", 2L)).toDF("from_name", "dst")
+    val err = intercept[IllegalArgumentException](
+      Graph.triangleStats(e, "from_name", "dst"))
+    assert(err.getMessage.contains("from_name"))
+  }
+
+  test("triangles: one lineage with nothing persisted, at most 2 jobs, and " +
+      "no stage wider than the partitioner") {
+    // three range slices and no exchange: the partitioner has
+    // max(3, defaultParallelism) partitions, against 200 shuffle partitions
+    val edges = spark.range(0, 240, 1, 3).select((col("id") % 17).as("src"),
+      ((col("id") * 7 + 3) % 19).as("dst"))
+    val sc = spark.sparkContext
+    val persisted = sc.getPersistentRDDs.keySet
+    val (jobs, tasks) = jobProfile(Graph.triangleStats(edges, "src", "dst").collect())
+    assert(jobs <= 2, s"$jobs jobs")
+    assert(tasks <= math.max(3, sc.defaultParallelism), s"$tasks tasks in a stage")
+    assert((sc.getPersistentRDDs.keySet -- persisted).isEmpty,
+      sc.getPersistentRDDs.keySet -- persisted)
   }
 
   test("capped triangles: non-binding cap reproduces the exact count, " +

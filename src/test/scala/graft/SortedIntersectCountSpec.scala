@@ -8,10 +8,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * sorted-unique input the hot paths feed it — including empty arrays,
   * disjoint sets, full overlap, negative hashes (sorted as signed longs,
   * the same order ShingleHashes/sort_array produce), and asymmetric
-  * lengths. Checked in BOTH execution modes: whole-stage codegen (the
-  * bench path) and interpreted eval (a projection wide enough is not
-  * needed — forcing via a non-codegen wrapper would be artificial, so
-  * the interpreted branch is pinned through the expression's eval). */
+  * lengths. Checked in BOTH execution modes: the expression's
+  * interpreted `eval` against set semantics, and against its generated
+  * code (a compiled projection) on the same rows. */
 class SortedIntersectCountSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
   import spark.implicits._
@@ -53,6 +52,36 @@ class SortedIntersectCountSpec extends AnyFunSuite {
       val expected = a.toSet.intersect(b.toSet).size.toLong
       assert(e.eval(null) == expected, s"a=${a.toSeq} b=${b.toSeq}")
     }
+  }
+
+  test("interpreted eval agrees with the generated code on the same rows") {
+    import org.apache.spark.sql.catalyst.InternalRow
+    import org.apache.spark.sql.catalyst.expressions.BoundReference
+    import org.apache.spark.sql.catalyst.expressions.codegen.GenerateUnsafeProjection
+    import org.apache.spark.sql.catalyst.util.GenericArrayData
+    import org.apache.spark.sql.types.{ArrayType, LongType}
+    val arr = ArrayType(LongType, containsNull = false)
+    val e = graft.plans.SortedIntersectCount(
+      BoundReference(0, arr, nullable = true), BoundReference(1, arr, nullable = true))
+    val generated = GenerateUnsafeProjection.generate(Seq(e))
+    val rows = cases.map { case (a, b) =>
+        InternalRow(new GenericArrayData(a), new GenericArrayData(b)) } :+
+      InternalRow(new GenericArrayData(Array(1L, 2L)), null)
+    rows.foreach { row =>
+      val out = generated(row)
+      val interpreted = e.eval(row)
+      if (interpreted == null) assert(out.isNullAt(0))
+      else assert(!out.isNullAt(0) && out.getLong(0) == interpreted, row)
+    }
+  }
+
+  test("an array type that admits null elements is rejected at analysis") {
+    import org.apache.spark.sql.types.{ArrayType, LongType}
+    val df = Seq((Seq(Option(1L), Option(2L)), Array(2L))).toDF("a", "b")
+    assert(df.schema("a").dataType == ArrayType(LongType, containsNull = true))
+    val err = intercept[org.apache.spark.sql.AnalysisException](
+      df.select(graft.plans.SketchFunctions.sortedIntersectCount(col("a"), col("b"))))
+    assert(err.getMessage.contains("non-null elements"), err.getMessage)
   }
 
   test("null array inputs yield null, matching size(array_intersect) nullability") {
