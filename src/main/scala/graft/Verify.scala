@@ -1,6 +1,8 @@
 package graft
 import graft.util.GraftSession
 import java.nio.file.{Files, Paths}
+import scala.jdk.CollectionConverters._
+import com.fasterxml.jackson.databind.ObjectMapper
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
@@ -32,21 +34,8 @@ object Verify {
     // oracle_sql.json is self-contained — even when SPARK_GRAFT_VERIFY_ONLY
     // skipped the image family and the store was never built above
     SparkEntry.ensureOracleData(spark, sfDir)
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"),
+      new ObjectMapper().writeValueAsString(SparkEntry.oracleSql.asJava))
     spark.stop()
   }
 }

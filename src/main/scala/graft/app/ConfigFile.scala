@@ -1,6 +1,12 @@
 package graft.app
 
-import scala.collection.immutable.ListMap
+import scala.jdk.CollectionConverters._
+
+import org.yaml.snakeyaml.{DumperOptions, LoaderOptions, Yaml}
+import org.yaml.snakeyaml.constructor.SafeConstructor
+import org.yaml.snakeyaml.error.YAMLException
+import org.yaml.snakeyaml.representer.Representer
+import org.yaml.snakeyaml.resolver.Resolver
 
 import graft.util.Names
 
@@ -9,12 +15,12 @@ import graft.util.Names
   * of typed dicts consumed by factory.py:4-13 / clickhouse.py:43-48),
   * `skip_fields`, and `extra_timestamps` (name -> timezone).
   *
-  * The environment has no YAML library (zero egress), so [[MiniYaml]]
-  * parses the minimal block-style subset those config files actually use:
-  * nested mappings, sequences of scalars, sequences of flat mappings,
-  * quoted/plain scalars, and `#` comments. Flow style, anchors, multi-line
-  * scalars and type tags are out of scope and rejected loudly rather than
-  * misread.
+  * The file is read by SnakeYAML (one of Spark's own jars), so any YAML
+  * syntax loads: block or flow style, anchors, block scalars. The loader
+  * is safe (no arbitrary object construction), refuses duplicate keys, and
+  * resolves no implicit types: every scalar stays the string it was
+  * written as (`port: 0123` is "0123", `yes` is "yes", `c:` is ""). Syntax
+  * errors surface as `IllegalArgumentException`.
   */
 object ConfigFile {
 
@@ -41,41 +47,52 @@ object ConfigFile {
     * ignored exactly like the reference's `.get(...)` reads; `warehouses`
     * is NOT required here (the reference KeyErrors without it) because the
     * CLI also accepts warehouse flags that merge with the file. */
-  def fromYaml(filePath: String): AppConfig = {
-    val text = {
-      val src = scala.io.Source.fromFile(filePath, "UTF-8")
-      try src.mkString finally src.close()
-    }
-    fromYamlString(text)
+  def fromYaml(filePath: String): AppConfig =
+    fromYamlString(java.nio.file.Files.readString(java.nio.file.Paths.get(filePath)))
+
+  /** The document as SnakeYAML's `java.util` tree; an empty one is null. */
+  private def load(text: String): Any = {
+    val options = new LoaderOptions()
+    options.setAllowDuplicateKeys(false)
+    val stringsOnly = new Resolver { override protected def addImplicitResolvers(): Unit = () }
+    val dumper = new DumperOptions()
+    val yaml = new Yaml(new SafeConstructor(options), new Representer(dumper), dumper, options, stringsOnly)
+    try yaml.load[Any](text)
+    catch { case e: YAMLException => throw new IllegalArgumentException(e.getMessage, e) }
+  }
+
+  private def kind(n: Any): String = n match {
+    case _: java.util.Map[_, _] => "mapping"
+    case _: java.util.List[_]   => "list"
+    case _: String              => "scalar"
+    case null                   => "null"
+    case other                  => other.getClass.getSimpleName
   }
 
   def fromYamlString(text: String): AppConfig = {
-    val root = MiniYaml.parse(text) match {
-      case MiniYaml.YMap(m) => m
+    val root = load(text) match {
+      case null                   => java.util.Collections.emptyMap[Any, Any]()
+      case m: java.util.Map[_, _] => m
       case _ => throw new IllegalArgumentException(
         "config file must be a top-level YAML mapping")
     }
-    def seqOf(key: String): Seq[MiniYaml.Node] = root.get(key) match {
-      case None                      => Nil
-      case Some(MiniYaml.YSeq(xs))   => xs
-      case Some(other)               => throw new IllegalArgumentException(
-        s"config key '$key' must be a list, got ${other.kind}")
-    }
-    def mapOf(key: String): ListMap[String, MiniYaml.Node] = root.get(key) match {
-      case None                    => ListMap.empty
-      case Some(MiniYaml.YMap(m))  => m
-      case Some(other)             => throw new IllegalArgumentException(
-        s"config key '$key' must be a mapping, got ${other.kind}")
-    }
-    def scalar(n: MiniYaml.Node, where: String): String = n match {
-      case MiniYaml.YStr(s) => s
+    def seqOf(key: String): Seq[Any] = Option(root.get(key)).fold(Seq.empty[Any]) {
+      case xs: java.util.List[_] => xs.asScala.toSeq
       case other => throw new IllegalArgumentException(
-        s"$where must be a scalar, got ${other.kind}")
+        s"config key '$key' must be a list, got ${kind(other)}")
     }
-    def flatMapOf(n: MiniYaml.Node, where: String): Map[String, String] = n match {
-      case MiniYaml.YMap(m) => m.map { case (k, v) => k -> scalar(v, s"$where.$k") }
+    def scalar(n: Any, where: String): String = n match {
+      case s: String => s
       case other => throw new IllegalArgumentException(
-        s"$where must be a mapping, got ${other.kind}")
+        s"$where must be a scalar, got ${kind(other)}")
+    }
+    def flatMapOf(n: Any, where: String): Map[String, String] = n match {
+      case m: java.util.Map[_, _] => m.asScala.toSeq.map { case (k, v) =>
+        val key = scalar(k, s"$where key")
+        key -> scalar(v, s"$where.$key")
+      }.toMap
+      case other => throw new IllegalArgumentException(
+        s"$where must be a mapping, got ${kind(other)}")
     }
 
     // apps: the reference collects into a set (dedup by value, configuration.py:36-38)
@@ -86,168 +103,11 @@ object ConfigFile {
       .distinct
     val warehouses = seqOf("warehouses").map(n => flatMapOf(n, "warehouses[]"))
     val skip = seqOf("skip_fields").map(n => scalar(n, "skip_fields[]"))
-    val extraTs = mapOf("extra_timestamps").map { case (k, v) =>
-      k -> scalar(v, s"extra_timestamps.$k")
+    val extraTs = Option(root.get("extra_timestamps")).fold(Map.empty[String, String]) {
+      case m: java.util.Map[_, _] => flatMapOf(m, "extra_timestamps")
+      case other => throw new IllegalArgumentException(
+        s"config key 'extra_timestamps' must be a mapping, got ${kind(other)}")
     }
-    AppConfig(apps, warehouses, skip, extraTs.toMap)
-  }
-}
-
-/** Minimal block-style YAML reader — just enough for the reference's config
-  * schema (see [[ConfigFile]]). Indentation-scoped recursive descent over
-  * physical lines. */
-object MiniYaml {
-
-  sealed trait Node { def kind: String }
-  final case class YStr(value: String) extends Node { def kind = "scalar" }
-  final case class YSeq(items: Seq[Node]) extends Node { def kind = "list" }
-  final case class YMap(entries: ListMap[String, Node]) extends Node { def kind = "mapping" }
-
-  private final case class Line(indent: Int, content: String)
-
-  def parse(text: String): Node = {
-    val lines = text.linesIterator.zipWithIndex.flatMap { case (raw, i) =>
-      // YAML forbids tabs in INDENTATION only (quoted scalars may carry them)
-      if (raw.takeWhile(c => c == ' ' || c == '\t').contains('\t'))
-        throw new IllegalArgumentException(s"line ${i + 1}: tabs are not allowed in YAML indentation")
-      val noComment = stripComment(raw)
-      val trimmed = noComment.trim
-      if (trimmed.isEmpty) None
-      else if (trimmed == "---") None // document start marker
-      else Some(Line(noComment.indexWhere(!_.isWhitespace), trimmed))
-    }.toVector
-    if (lines.isEmpty) YMap(ListMap.empty)
-    else parseBlock(lines)
-  }
-
-  /** Drop a trailing comment: a `#` that is not inside quotes and is either
-    * at the start or preceded by whitespace (YAML's rule). */
-  private def stripComment(s: String): String = {
-    var inS = false; var inD = false
-    var i = 0
-    while (i < s.length) {
-      val c = s.charAt(i)
-      if (c == '\'' && !inD) inS = !inS
-      else if (c == '"' && !inS) inD = !inD
-      else if (c == '#' && !inS && !inD && (i == 0 || s.charAt(i - 1).isWhitespace))
-        return s.substring(0, i)
-      i += 1
-    }
-    s
-  }
-
-  private def unquote(s: String): String = {
-    val t = s.trim
-    if (t.length >= 2 && t.head == '"' && t.last == '"')
-      t.substring(1, t.length - 1).replace("\\\"", "\"").replace("\\\\", "\\")
-    else if (t.length >= 2 && t.head == '\'' && t.last == '\'')
-      t.substring(1, t.length - 1).replace("''", "'")
-    else t
-  }
-
-  private def rejectFlow(v: String): Unit = {
-    val t = v.trim
-    if (t.startsWith("[") || t.startsWith("{") || t.startsWith("&") ||
-        t.startsWith("*") || t.startsWith("|") || t.startsWith(">") || t.startsWith("!"))
-      throw new IllegalArgumentException(
-        s"unsupported YAML feature (flow style / anchor / block scalar / tag) at: '$t'")
-  }
-
-  /** Split `key: value` at the first colon outside quotes. */
-  private def splitKey(content: String): Option[(String, String)] = {
-    var inS = false; var inD = false
-    var i = 0
-    while (i < content.length) {
-      val c = content.charAt(i)
-      if (c == '\'' && !inD) inS = !inS
-      else if (c == '"' && !inS) inD = !inD
-      else if (c == ':' && !inS && !inD &&
-               (i + 1 == content.length || content.charAt(i + 1).isWhitespace))
-        return Some((unquote(content.substring(0, i)), content.substring(i + 1).trim))
-      i += 1
-    }
-    None
-  }
-
-  private def parseBlock(lines: Vector[Line]): Node = {
-    val base = lines.head.indent
-    if (lines.exists(_.indent < base))
-      throw new IllegalArgumentException("inconsistent indentation")
-    if (lines.head.content.startsWith("- ") || lines.head.content == "-") parseSeq(lines, base)
-    else parseMap(lines, base)
-  }
-
-  private def parseSeq(lines: Vector[Line], base: Int): Node = {
-    val items = Vector.newBuilder[Node]
-    var i = 0
-    while (i < lines.length) {
-      val l = lines(i)
-      if (l.indent != base || !(l.content.startsWith("- ") || l.content == "-"))
-        throw new IllegalArgumentException(s"expected list item at indent $base, got '${l.content}'")
-      val inline = if (l.content == "-") "" else l.content.substring(2).trim
-      // children: following lines indented deeper than the dash
-      var j = i + 1
-      while (j < lines.length && lines(j).indent > base) j += 1
-      val children = lines.slice(i + 1, j)
-      if (inline.isEmpty) {
-        if (children.isEmpty) throw new IllegalArgumentException("empty list item")
-        items += parseBlock(children)
-      } else splitKey(inline) match {
-        case Some((k, v)) =>
-          // `- key: value` — a mapping whose first entry sits on the dash
-          // line. Re-materialize it at its TRUE column (dash indent + 2):
-          // continuation keys at that column are siblings, deeper lines
-          // nest under the preceding key (so `- opts:` + indented block
-          // parses as a nested mapping, not flattened siblings).
-          items += parseMap(Line(base + 2, inline) +: children, base + 2)
-        case None =>
-          if (children.nonEmpty)
-            throw new IllegalArgumentException(s"scalar list item '$inline' cannot have children")
-          rejectFlow(inline)
-          items += YStr(unquote(inline))
-      }
-      i = j
-    }
-    YSeq(items.result())
-  }
-
-  private def parseMap(lines: Vector[Line], base: Int): Node = {
-    var entries = ListMap.empty[String, Node]
-    var i = 0
-    while (i < lines.length) {
-      val l = lines(i)
-      if (l.indent != base)
-        throw new IllegalArgumentException(s"expected mapping key at indent $base, got '${l.content}'")
-      val (k, v) = splitKey(l.content).getOrElse(
-        throw new IllegalArgumentException(s"expected 'key: value', got '${l.content}'"))
-      var j = i + 1
-      while (j < lines.length && lines(j).indent > base) j += 1
-      var children = lines.slice(i + 1, j)
-      // YAML allows a block sequence at the SAME indent as its mapping key
-      // (`key:` followed by zero-indented `- item` lines — the default
-      // style of many emitters); claim those items for this key.
-      if (v.isEmpty && children.isEmpty) {
-        var e = i + 1
-        while (e < lines.length && lines(e).indent == base &&
-               (lines(e).content.startsWith("- ") || lines(e).content == "-")) {
-          e += 1
-          while (e < lines.length && lines(e).indent > base) e += 1 // item body
-        }
-        if (e > i + 1) { children = lines.slice(i + 1, e); j = e }
-      }
-      val node =
-        if (v.nonEmpty) {
-          if (children.nonEmpty)
-            throw new IllegalArgumentException(s"key '$k' has both a value and children")
-          rejectFlow(v)
-          YStr(unquote(v))
-        } else if (children.nonEmpty) parseBlock(children)
-        else YStr("") // `key:` with nothing under it -> empty scalar (null-ish)
-      if (entries.contains(k))
-        throw new IllegalArgumentException(s"duplicate mapping key '$k'")
-      entries = entries + (k -> node)
-      i = j
-    }
-    YMap(entries)
+    AppConfig(apps, warehouses, skip, extraTs)
   }
 }

@@ -2,17 +2,20 @@ package graft.app
 
 import org.apache.spark.sql.SparkSession
 
+import graft.ingest.Readers
 import graft.jobs.{JobConf, SendToWarehouseJob}
 import graft.streaming.StreamingSend
 import graft.util.GraftSession
 
 /** CLI entry point — the `seghouse send` equivalent (reference
   * seghouse/app.py:16-44). Like the reference it takes `--config-file`
-  * (YAML: apps/warehouses/skip_fields/extra_timestamps — parsed by
-  * [[ConfigFile]], no YAML library needed) and/or the same settings as
-  * flags; flag values are appended to the file's. The source dir is any
-  * Spark-readable path (local or s3a://), and `--stream` switches to the
-  * Structured Streaming runtime over the same pipeline core.
+  * (YAML: apps/warehouses/skip_fields/extra_timestamps — read by
+  * [[ConfigFile]] with SnakeYAML, every value a string) and/or the same
+  * settings as flags; flag values are appended to the file's. The source
+  * dir is any Spark-readable path (local or s3a://), and `--stream`
+  * switches to the Structured Streaming runtime over the same pipeline
+  * core, with the schema inferred once by [[graft.ingest.Readers.ndjson]]
+  * from the files already there.
   *
   * Usage:
   *   runMain graft.app.SendCli --source-dir DIR --namespace NS
@@ -85,7 +88,8 @@ object SendCli {
     if (!a.stream) {
       new SendToWarehouseJob(spark, conf, a.namespace).execute(a.sourceDir)
     } else {
-      val schema = spark.read.json(a.sourceDir).schema // infer once from existing files
+      // infer once from the existing files, as a batch run reads them
+      val schema = Readers.ndjson(spark, a.sourceDir).schema
       val q = StreamingSend.start(spark, conf, a.namespace, a.sourceDir, schema, a.checkpoint)
       q.awaitTermination()
     }

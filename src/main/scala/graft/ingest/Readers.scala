@@ -1,7 +1,6 @@
 package graft.ingest
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.types.StructType
 
 /** Sources (reference O-1, O-2).
   *
@@ -17,10 +16,9 @@ object Readers {
     * per line -> one row. Malformed lines are captured in a
     * `_corrupt_record` column (PERMISSIVE), the distributed analog of the
     * reference's per-line parse inside one process. */
-  def ndjson(spark: SparkSession, path: String, schema: Option[StructType] = None): DataFrame = {
-    val r = spark.read
+  def ndjson(spark: SparkSession, path: String): DataFrame =
+    spark.read
       .option("mode", "PERMISSIVE")
       .option("columnNameOfCorruptRecord", "_corrupt_record")
-    schema.fold(r.json(path))(s => r.schema(s).json(path))
-  }
+      .json(path)
 }

@@ -1,6 +1,10 @@
 package graft.sink
 
-import org.apache.hadoop.fs.Path
+import com.fasterxml.jackson.annotation.JsonPropertyOrder
+import com.fasterxml.jackson.databind.DeserializationFeature
+import com.fasterxml.jackson.databind.json.JsonMapper
+import com.fasterxml.jackson.module.scala.DefaultScalaModule
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -16,7 +20,9 @@ import org.apache.spark.sql.functions._
   *
   * Layout under the snapshot root:
   *   data/<token>/part-*.parquet   — each commit writes a FRESH subdir
-  *   _manifests/v<N>.json          — file list + row count; rename-committed
+  *   _manifests/v<N>.json          — `{"version":N,"rows":R,"files":[...]}`
+  *                                   (the [[Snapshot]]); rename-committed
+  *   _published/p<S>.json          — `{"seq":S,"version":N}`; see [[publish]]
   *
   * Commit protocol: write data files → write `v<N>.<uuid>.json.tmp` →
   * rename to `v<N>.json` (atomic on HDFS/posix). A crash before the
@@ -35,7 +41,21 @@ import org.apache.spark.sql.functions._
   * is what makes reader/writer isolation free. */
 object SnapshotSink {
 
+  /** A committed version; its manifest is this case class as JSON, in
+    * the key order below. */
+  @JsonPropertyOrder(Array("version", "rows", "files"))
   final case class Snapshot(version: Int, files: Seq[String], rows: Long)
+
+  /** A publish pointer: its sequence number and the version it names. */
+  private final case class Pointer(seq: Int, version: Int)
+
+  /** The one JSON codec of manifests and publish pointers; a file that
+    * lacks a field fails to decode rather than reading as empty. */
+  private val json = JsonMapper.builder().addModule(DefaultScalaModule)
+    .enable(DeserializationFeature.FAIL_ON_MISSING_CREATOR_PROPERTIES).build()
+
+  private[graft] def encodeManifest(s: Snapshot): String = json.writeValueAsString(s)
+  private[graft] def decodeManifest(text: String): Snapshot = json.readValue(text, classOf[Snapshot])
 
   private def fs(spark: SparkSession, p: Path) =
     p.getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -69,9 +89,16 @@ object SnapshotSink {
       .sorted
   }
 
-  /** A small commit file's contents (a manifest or a publish pointer). */
-  private def readSmall(spark: SparkSession, p: Path): String = {
-    val in = fs(spark, p).open(p)
+  /** Parquet files (or sidecar dirs) read by their literal paths: a
+    * manifest names files, not glob patterns, so a root whose name holds
+    * `\`, `[` or `{` must not be expanded as one. */
+  private def readParquet(spark: SparkSession, paths: String*): DataFrame =
+    spark.read.option("__globPaths__", "false").parquet(paths: _*)
+
+  /** A small metadata file's contents: a manifest, a publish pointer or
+    * a [[TableCatalog]] schema. */
+  private[sink] def readSmall(f: FileSystem, p: Path): String = {
+    val in = f.open(p)
     try new String(org.apache.commons.io.IOUtils.toByteArray(in),
       java.nio.charset.StandardCharsets.UTF_8)
     finally in.close()
@@ -167,7 +194,7 @@ object SnapshotSink {
     val allCarried = prior.forall(_.files.size == carried.size)
     // the prior's sidecar rows for the carried files
     def carriedRows(dir: Path): DataFrame = {
-      val side = spark.read.parquet(dir.toString)
+      val side = readParquet(spark, dir.toString)
       if (allCarried) side
       else {
         val keep = carried.map(canon)
@@ -218,13 +245,9 @@ object SnapshotSink {
       }
     }
     toWrite.foreach { case (d, p) => d.write.mode("overwrite").parquet(p.toString) }
-    val all = (carried ++ newFiles).sorted
-    val json = {
-      def q(s: String) = "\"" + s.replace("\\", "\\\\").replace("\"", "\\\"") + "\""
-      s"""{"version":$version,"rows":$rows,"files":[${all.map(q).mkString(",")}]}"""
-    }
-    writeNoClobber(spark, manifestDir(root), s"v$version", json, "snapshot commit")
-    Snapshot(version, all, rows)
+    val committed = Snapshot(version, (carried ++ newFiles).sorted, rows)
+    writeNoClobber(spark, manifestDir(root), s"v$version", encodeManifest(committed), "snapshot commit")
+    committed
   }
 
   /** Exact row count of parquet `files` from their footers: on the driver
@@ -232,7 +255,7 @@ object SnapshotSink {
     * bounded), a distributed footer-only count above. */
   private[sink] def parquetRows(spark: SparkSession, files: Seq[String]): Long =
     if (files.isEmpty) 0L
-    else footerFileStats(spark, files, Nil).fold(spark.read.parquet(files: _*).count())(_._2)
+    else footerFileStats(spark, files, Nil).fold(readParquet(spark, files: _*).count())(_._2)
 
   /** The latest committed snapshot, if any. */
   private def latest(spark: SparkSession, root: String): Option[Snapshot] =
@@ -266,10 +289,8 @@ object SnapshotSink {
     * (no directory re-listing; [[history]] reads V manifests off ONE
     * listing instead of V+1). */
   private def readManifest(spark: SparkSession, root: String, v: Int): Snapshot = {
-    val json = readSmall(spark, new Path(manifestDir(root), s"v$v.json"))
-    // manifest fields are machine-written (see commitVersion) — parse positionally
-    val rows = """"rows":(\d+)""".r.findFirstMatchIn(json).get.group(1).toLong
-    Snapshot(v, parseFilesArray(json), rows)
+    val p = new Path(manifestDir(root), s"v$v.json")
+    decodeManifest(readSmall(fs(spark, p), p))
   }
 
   /** The committed snapshot descriptor for `version` (default: latest). */
@@ -279,41 +300,6 @@ object SnapshotSink {
     val v = version.getOrElse(vs.last)
     require(vs.contains(v), s"snapshot v$v not committed (have ${vs.mkString(",")})")
     readManifest(spark, root, v)
-  }
-
-  /** The `"files":[...]` array, parsed by an escape-aware character walk.
-    * A naive split-on-comma corrupts any path CONTAINING a comma (legal
-    * in URIs), and unescaping `\"` before `\\` mangles trailing
-    * backslash-quote runs (r7 advisor finding) — a string scanner that
-    * honors JSON escapes in one pass has neither failure mode. */
-  private[graft] def parseFilesArray(json: String): Seq[String] = {
-    val tag = "\"files\":["
-    val start = json.indexOf(tag)
-    require(start >= 0, s"malformed manifest (no files array): ${json.take(200)}")
-    var i = start + tag.length
-    val out = scala.collection.mutable.ArrayBuffer.empty[String]
-    val sb = new StringBuilder
-    var inStr = false
-    var done = false
-    while (!done) {
-      require(i < json.length, "malformed manifest: unterminated files array")
-      val c = json.charAt(i)
-      if (inStr) c match {
-        case '\\' =>
-          require(i + 1 < json.length, "malformed manifest: dangling escape")
-          sb.append(json.charAt(i + 1)) // commit only emits \" and \\
-          i += 2
-        case '"' => out += sb.result(); sb.clear(); inStr = false; i += 1
-        case ch  => sb.append(ch); i += 1
-      } else c match {
-        case '"'       => inStr = true; i += 1
-        case ']'       => done = true
-        case ',' | ' ' => i += 1
-        case ch => throw new IllegalStateException(
-          s"malformed manifest: unexpected '$ch' in files array")
-      }
-    }
-    out.toSeq
   }
 
   /** DESCRIBE HISTORY analog: one row per committed version —
@@ -347,15 +333,15 @@ object SnapshotSink {
       s"cannot publish uncommitted version $version")
     val seq = numbered(spark, publishDir(root), "p").lastOption.getOrElse(0) + 1
     writeNoClobber(spark, publishDir(root), s"p$seq",
-      s"""{"seq":$seq,"version":$version}""", "publish")
+      json.writeValueAsString(Pointer(seq, version)), "publish")
   }
 
   /** The currently published version (highest-sequence pointer), or
     * None when nothing has been published yet. */
   def publishedVersion(spark: SparkSession, root: String): Option[Int] =
     numbered(spark, publishDir(root), "p").lastOption.map { seq =>
-      val json = readSmall(spark, new Path(publishDir(root), s"p$seq.json"))
-      """"version":(\d+)""".r.findFirstMatchIn(json).get.group(1).toInt
+      val p = new Path(publishDir(root), s"p$seq.json")
+      json.readValue(readSmall(fs(spark, p), p), classOf[Pointer]).version
     }
 
   /** Read through the published pointer — what a downstream consumer
@@ -403,7 +389,7 @@ object SnapshotSink {
   /** Read a committed snapshot BY ITS MANIFEST — orphan files in the
     * data directories are invisible by construction. */
   def read(spark: SparkSession, root: String, version: Option[Int] = None): DataFrame =
-    spark.read.parquet(filled(spark, root, version).files: _*)
+    readParquet(spark, filled(spark, root, version).files: _*)
 
   /** [[snapshot]], refusing a version without files. */
   private def filled(spark: SparkSession, root: String, version: Option[Int]): Snapshot = {
@@ -457,7 +443,7 @@ object SnapshotSink {
   private def computeFileStats(
       spark: SparkSession, files: Seq[String], statsCols: Seq[String],
       sumCols: Seq[String] = Seq.empty): DataFrame = {
-    val base = spark.read.parquet(files: _*)
+    val base = readParquet(spark, files: _*)
       .select(input_file_name().as("file") +:
         (statsCols ++ sumCols).distinct.map(col): _*)
     val aggs = count(lit(1L)).as("rows") +: (statsCols.flatMap(c => Seq(
@@ -601,7 +587,7 @@ object SnapshotSink {
     require(fs(spark, p).exists(p),
       s"snapshot v${s.version} has no zone-map sidecar (committed without " +
         "stats — use commitWithStats/appendWithStats)")
-    spark.read.parquet(p.toString)
+    readParquet(spark, p.toString)
   }
 
   final case class PrunedRead(
@@ -667,8 +653,8 @@ object SnapshotSink {
       spark: SparkSession, s: Snapshot, kept: Seq[String],
       residual: Option[org.apache.spark.sql.Column]): PrunedRead = {
     val df =
-      if (kept.isEmpty) spark.read.parquet(s.files: _*).filter(lit(false))
-      else residual.foldLeft(spark.read.parquet(kept: _*))(_ filter _)
+      if (kept.isEmpty) readParquet(spark, s.files: _*).filter(lit(false))
+      else residual.foldLeft(readParquet(spark, kept: _*))(_ filter _)
     PrunedRead(df, kept.size, s.files.size, kept)
   }
 
@@ -695,7 +681,7 @@ object SnapshotSink {
       keys: org.apache.spark.sql.Column, expectedPerFile: Long,
       fpp: Double): DataFrame = {
     require(expectedPerFile > 0, "expectedPerFile must be positive")
-    spark.read.parquet(files: _*)
+    readParquet(spark, files: _*)
       .select(input_file_name().as("file"), keys.as("ks"))
       .groupBy("file")
       .agg(count(lit(1L)).as("rows"),
@@ -788,7 +774,7 @@ object SnapshotSink {
     require(fs(spark, p).exists(p),
       s"snapshot v$version has no set index (committed without one — " +
         "use commitWithSetIndex)")
-    spark.read.parquet(p.toString).select("file", "bloom").collect()
+    readParquet(spark, p.toString).select("file", "bloom").collect()
       .filter(r => graft.plans.BloomSetAgg.mightContainAny(r.getAs[Array[Byte]]("bloom"), hs))
       .map(_.getString(0)).toSeq.sorted
   }
@@ -855,7 +841,7 @@ object SnapshotSink {
       lit(metaN).as("n"), lit(metaSum).cast(SumDec).as("s"))
     val scanned =
       if (boundary.isEmpty) metaDf.filter(lit(false))
-      else spark.read.parquet(boundary.map(_.getString(0)).toIndexedSeq.sorted: _*)
+      else readParquet(spark, boundary.map(_.getString(0)).toIndexedSeq.sorted: _*)
         .filter(col(c) >= lit(lo) && col(c) <= lit(hi))
         .agg(count(lit(1L)).as("n"),
           sum(col(measure).cast("decimal(18,6)")).cast(SumDec).as("s"))
@@ -893,7 +879,7 @@ object SnapshotSink {
     val hitFiles = keptBySet(spark, root, s.version, Array(h))
     if (hitFiles.isEmpty) return s // nothing can match — no new version
     val hitCanon = hitFiles.map(canon).toSet
-    val survivors = spark.read.parquet(hitFiles: _*)
+    val survivors = readParquet(spark, hitFiles: _*)
       .filter(!coalesce(pred, lit(false)))
       .coalesce(hitFiles.size)
     commitVersion(spark, root, Some(s), s.files.filterNot(f => hitCanon.contains(canon(f))),
@@ -943,7 +929,7 @@ object SnapshotSink {
     val newFiles =
       if (boundary.isEmpty) Seq.empty[String]
       else writeFiles(
-        spark.read.parquet(boundary: _*)
+        readParquet(spark, boundary: _*)
           .filter(col(c).isNull || col(c) >= lit(cutoff))
           .coalesce(boundary.size),
         root)
@@ -987,7 +973,7 @@ object SnapshotSink {
     val hitCanon = hitFiles.map(canon).toSet
     val stored =
       if (hitFiles.isEmpty) batch.filter(lit(false))
-      else spark.read.parquet(hitFiles: _*)
+      else readParquet(spark, hitFiles: _*)
     val resolved = graft.etl.Dedup.lastWriteWins(
       stored.unionByName(batch), keyCols, verCol, tieBreak)
       .coalesce(math.max(1, hitFiles.size))
@@ -1018,7 +1004,7 @@ object SnapshotSink {
     require(targetFiles >= 1, "targetFiles must be >= 1")
     val s = snapshot(spark, root)
     require(s.files.nonEmpty, s"snapshot v${s.version} has no files to compact")
-    val df = spark.read.parquet(s.files: _*)
+    val df = readParquet(spark, s.files: _*)
     val laid = clusterCol match {
       case Some(c) => df.repartitionByRange(targetFiles, col(c))
       case None => df.coalesce(targetFiles)

@@ -1,6 +1,5 @@
 package graft.sink
 
-import java.io.{BufferedReader, InputStreamReader}
 import java.nio.charset.StandardCharsets
 
 import org.apache.hadoop.conf.Configuration
@@ -67,16 +66,8 @@ final class TableCatalog(val root: String) {
     * non-transactional store and is documented rather than denied. */
   def describe(db: String, t: String): Option[StructType] = {
     def readFile(p: Path): Option[StructType] =
-      try {
-        val in = fs.open(p)
-        try {
-          val r  = new BufferedReader(new InputStreamReader(in, StandardCharsets.UTF_8))
-          val sb = new StringBuilder
-          var line = r.readLine()
-          while (line != null) { sb.append(line); line = r.readLine() }
-          Some(DataType.fromJson(sb.toString).asInstanceOf[StructType])
-        } finally in.close()
-      } catch { case _: java.io.FileNotFoundException => None }
+      try Some(DataType.fromJson(SnapshotSink.readSmall(fs, p)).asInstanceOf[StructType])
+      catch { case _: java.io.FileNotFoundException => None }
     readFile(schemaFile(db, t))
       .orElse(readFile(backupFile(db, t)))
       .orElse(readFile(schemaFile(db, t)))

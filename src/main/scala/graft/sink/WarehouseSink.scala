@@ -100,8 +100,13 @@ final class WarehouseSink(val catalog: TableCatalog) extends Warehouse {
 
   /** The users table is small relative to events (bounded by |distinct
     * users|), so read-merge-overwrite per batch is the right trade (SURVEY
-    * §7.3 hard part 2). Stage-then-swap: parquet has no transactional
-    * replace; a crash never leaves a truncated users table. */
+    * §7.3 hard part 2). Stage-then-swap: the new table is written in
+    * full to a staging dir, so a crash while writing leaves the old users
+    * table whole. The swap itself is not atomic (parquet has no
+    * transactional replace): it deletes the old dir, then renames the
+    * staged one into place, and a crash between the two leaves no users
+    * table at all, which the next batch rebuilds from its own rows alone.
+    * ROADMAP item 2 tracks the fix. */
   override protected def replaceUsers(db: String, winners: DataFrame): Unit =
     replaceTableContents(winners.sparkSession, db, UsersTable)(tmp =>
       winners.write.mode("overwrite").parquet(tmp))

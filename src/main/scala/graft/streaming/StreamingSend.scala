@@ -13,9 +13,17 @@ import graft.jobs.{JobConf, SendToWarehouseJob}
   * its only streaming-ish semantic is idempotent re-delivery via
   * ReplacingMergeTree dedup on message_id (O-22). Natively:
   * `readStream.json(dir)` + event-time watermark on `timestamp` +
-  * `dropDuplicatesWithinWatermark(message_id)` gives exactly-once-per-
-  * message-id ingestion with bounded state, and `foreachBatch` reuses the
-  * batch `processBatch` core unchanged — one code path for both runtimes.
+  * `dropDuplicatesWithinWatermark(message_id)` drops a re-delivered
+  * message id with bounded state, and `foreachBatch` reuses the batch
+  * `processBatch` core unchanged — one code path for both runtimes.
+  *
+  * What that guarantees today: a message id is ingested once per run
+  * only while its copies arrive within the watermark of each other; a
+  * later copy is ingested again. Output is at-least-once: `foreachBatch`
+  * ignores the batch id and the table appends are blind, so a micro-batch
+  * that is replayed after a failure (the query restarts on its
+  * checkpoint) appends its rows a second time. ROADMAP item 2 tracks the
+  * replay guard.
   */
 object StreamingSend {
 

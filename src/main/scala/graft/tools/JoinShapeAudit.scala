@@ -107,6 +107,9 @@ object JoinShapeAudit {
         case e: Throwable =>
           planErrors :+= (n -> Option(e.getMessage).getOrElse(e.getClass.getName).take(160))
       }
+      // building a query runs its eager checkpoints; release their blocks
+      // per query, as DecimalGateAudit does
+      GraftSession.release(spark)
     }
     println(s"\n== JoinShapeAudit: ${names.size} queries, ${flagged.size} with cross/non-equi joins ==")
     flagged.foreach { case (n, hits) =>

@@ -99,6 +99,9 @@ object WindowAudit {
         case e: Throwable =>
           planErrors :+= (n -> Option(e.getMessage).getOrElse(e.getClass.getName).take(160))
       }
+      // building a query runs its eager checkpoints; release their blocks
+      // per query, as DecimalGateAudit does
+      GraftSession.release(spark)
     }
     println(s"\n== WindowAudit: ${names.size} queries, ${flagged.size} with unpartitioned windows ==")
     flagged.foreach { case (n, hits) =>

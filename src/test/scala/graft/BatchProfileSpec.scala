@@ -4,7 +4,6 @@ import java.nio.file.{Files, Path}
 import java.nio.charset.StandardCharsets
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -133,34 +132,20 @@ class BatchProfileSpec extends AnyFunSuite {
     val wh = Files.createTempDirectory("graft_profile_jobs")
     val job = new SendToWarehouseJob(spark, JobConf(warehouseRoots = Seq(wh.toString)), namespace)
 
-    val group = "batch-profile-spec-" + System.nanoTime()
-    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group))
-          jobs.add(e.stageInfos.map(_.name).mkString("+"))
-    }
-    val sc = spark.sparkContext
-    sc.addSparkListener(listener)
     val aqe = spark.conf.get("spark.sql.adaptive.enabled")
     spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try {
-      sc.setJobGroup(group, "processBatch job count")
-      job.processBatch(raw)
-    } finally {
-      spark.conf.set("spark.sql.adaptive.enabled", aqe)
-      sc.clearJobGroup()
-      // let the bus deliver the last job starts before reading the count
-      Thread.sleep(500)
-      sc.removeSparkListener(listener)
-      raw.unpersist()
-    }
+    val (_, jobs) =
+      try JobRecorder.record(spark)(job.processBatch(raw))
+      finally {
+        spark.conf.set("spark.sql.adaptive.enabled", aqe)
+        raw.unpersist()
+      }
 
     val db = wh.resolve(Names.decamelize(namespace)).toFile
     val stored = db.listFiles.filter(_.isDirectory).filter { t =>
       Files.walk(t.toPath).anyMatch(_.toString.endsWith(".parquet"))
     }.map(_.getName).sorted.toSeq
-    (stored, jobs.toArray.toSeq.map(_.toString), db.toPath)
+    (stored, JobRecorder.stageNames(jobs), db.toPath)
   }
 
   /** The bounds every batch keeps: at most 2 + 3 jobs per stored table in

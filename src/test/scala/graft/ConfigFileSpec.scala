@@ -2,12 +2,12 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.app.{ConfigFile, MiniYaml}
+import graft.app.ConfigFile
 import graft.sink.{ClickHouseDdl, ClickHouseWarehouse, JdbcWarehouse, WarehouseFactory, WarehouseSink}
 
 /** Config-file surface (reference seghouse/config/configuration.py:32-45 +
-  * warehouse/factory.py:4-13): YAML-subset parsing, AppConfig extraction,
-  * typed warehouse dispatch, and the cluster DDL behavior
+  * warehouse/factory.py:4-13): YAML reading with every scalar a string,
+  * AppConfig extraction, typed warehouse dispatch, and the cluster DDL behavior
   * (clickhouse.py:62-63,74-75). */
 class ConfigFileSpec extends AnyFunSuite {
 
@@ -56,16 +56,53 @@ class ConfigFileSpec extends AnyFunSuite {
     assert(c.warehouses.size == 1)
   }
 
-  test("MiniYaml rejects what it cannot faithfully read") {
-    intercept[IllegalArgumentException](MiniYaml.parse("a: [1, 2]"))       // flow seq
-    intercept[IllegalArgumentException](MiniYaml.parse("a: {b: 1}"))       // flow map
-    intercept[IllegalArgumentException](MiniYaml.parse("a: |\n  text"))    // block scalar
-    intercept[IllegalArgumentException](MiniYaml.parse("\ta: 1"))          // tab indent
-    intercept[IllegalArgumentException](MiniYaml.parse("a: 1\na: 2"))      // dup key
-    intercept[IllegalArgumentException](ConfigFile.fromYamlString("- just\n- a list"))
+  test("flow style, anchors and block scalars read like block style") {
+    val c = ConfigFile.fromYamlString(
+      """apps: [{write_key: wk1, name: MyApp}, {write_key: wk1, name: MyApp},
+        |       {write_key: wk2, name: otherApp}]
+        |warehouses:
+        |  - {type: clickhouse, host: ch.example.com, port: 8123, user: &user default,
+        |     password: "p#ss"}
+        |  - type: parquet
+        |    root: |-
+        |      /tmp/wh
+        |skip_fields: [context_library_version, 'context_library_name']
+        |zones: {ist: &ist Asia/Kolkata}
+        |extra_timestamps:
+        |  timestamp_ist: *ist
+        |  timestamp_ny: >-
+        |    America/New_York
+        |""".stripMargin)
+    assert(c == ConfigFile.fromYamlString(referenceShaped))
+  }
+
+  test("tabs, duplicate keys, a top-level list and non-scalar values are refused") {
+    def refused(doc: String) = intercept[IllegalArgumentException](ConfigFile.fromYamlString(doc))
+    refused("\ta: 1")                                  // tab indent
+    refused("a: 1\na: 2")                              // dup key
+    refused("warehouses:\n  - type: x\n    type: y")   // dup key inside an entry
+    refused("- just\n- a list")
+    assert(refused("skip_fields: [[a, b]]").getMessage == "skip_fields[] must be a scalar, got list")
+    assert(refused("extra_timestamps: [a]").getMessage ==
+      "config key 'extra_timestamps' must be a mapping, got list")
     // tabs are only illegal in INDENTATION — quoted scalars may carry them
-    assert(MiniYaml.parse("a: \"x\ty\"").asInstanceOf[MiniYaml.YMap]
-      .entries("a") == MiniYaml.YStr("x\ty"))
+    assert(ConfigFile.fromYamlString("skip_fields:\n  - \"x\ty\"").skipFields == Seq("x\ty"))
+  }
+
+  test("numeric- and boolean-looking scalars stay verbatim") {
+    val c = ConfigFile.fromYamlString(
+      """warehouses:
+        |  - type: clickhouse
+        |    port: 0123
+        |    secure: yes
+        |    timeout: 1e3
+        |    cluster: null
+        |    password: ~
+        |skip_fields: [0123, yes, Off, true, 1.50]
+        |""".stripMargin)
+    assert(c.warehouses == Seq(Map("type" -> "clickhouse", "port" -> "0123", "secure" -> "yes",
+      "timeout" -> "1e3", "cluster" -> "null", "password" -> "~")))
+    assert(c.skipFields == Seq("0123", "yes", "Off", "true", "1.50"))
   }
 
   test("block sequences at the same indent as their key (common emitter style)") {
@@ -89,28 +126,23 @@ class ConfigFileSpec extends AnyFunSuite {
   }
 
   test("nested mapping under a list item nests instead of flattening") {
-    val n = MiniYaml.parse(
-      """servers:
+    // flattened, retries and mode would be two more scalar keys of the
+    // entry; nested, opts is a mapping, which a warehouse entry refuses
+    val e = intercept[IllegalArgumentException](ConfigFile.fromYamlString(
+      """warehouses:
         |  - name: a
         |    opts:
         |      retries: 3
         |      mode: fast
         |  - name: b
-        |""".stripMargin).asInstanceOf[MiniYaml.YMap]
-    val items = n.entries("servers").asInstanceOf[MiniYaml.YSeq].items
-    val first = items.head.asInstanceOf[MiniYaml.YMap].entries
-    assert(first("name") == MiniYaml.YStr("a"))
-    assert(first("opts") == MiniYaml.YMap(scala.collection.immutable.ListMap(
-      "retries" -> MiniYaml.YStr("3"), "mode" -> MiniYaml.YStr("fast"))))
-    assert(items(1).asInstanceOf[MiniYaml.YMap].entries("name") == MiniYaml.YStr("b"))
+        |""".stripMargin))
+    assert(e.getMessage == "warehouses[].opts must be a scalar, got mapping")
   }
 
   test("quoting, comments, and empty values") {
-    val n = MiniYaml.parse(
-      "a: \"x # not a comment\"  # real comment\nb: 'it''s'\nc:\n").asInstanceOf[MiniYaml.YMap]
-    assert(n.entries("a") == MiniYaml.YStr("x # not a comment"))
-    assert(n.entries("b") == MiniYaml.YStr("it's"))
-    assert(n.entries("c") == MiniYaml.YStr(""))
+    val c = ConfigFile.fromYamlString(
+      "warehouses:\n  - a: \"x # not a comment\"  # real comment\n    b: 'it''s'\n    c:\n")
+    assert(c.warehouses == Seq(Map("a" -> "x # not a comment", "b" -> "it's", "c" -> "")))
   }
 
   test("factory dispatch mirrors factory.py") {

@@ -147,28 +147,12 @@ class GraphSpec extends AnyFunSuite {
   /** (jobs, most tasks in any stage) of the Spark jobs `body` submits
     * with 200 shuffle partitions. */
   private def jobProfile(body: => Unit): (Int, Int) = {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-    val sc = spark.sparkContext
-    val group = "graph-spec-" + System.nanoTime()
-    val tasks = new java.util.concurrent.ConcurrentLinkedQueue[Int]()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group))
-          tasks.add(e.stageInfos.map(_.numTasks).max)
-    }
     val shuffle = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.shuffle.partitions", "200")
-    sc.addSparkListener(listener)
-    try {
-      sc.setJobGroup(group, "graph spec job count")
-      body
-    } finally {
-      sc.clearJobGroup()
-      Thread.sleep(500) // let the bus deliver the last job starts
-      sc.removeSparkListener(listener)
-      spark.conf.set("spark.sql.shuffle.partitions", shuffle)
-    }
-    (tasks.size, tasks.toArray.map(_.asInstanceOf[Int]).maxOption.getOrElse(0))
+    val (_, jobs) =
+      try JobRecorder.record(spark)(body)
+      finally spark.conf.set("spark.sql.shuffle.partitions", shuffle)
+    (jobs.size, jobs.map(_.stageInfos.map(_.numTasks).max).maxOption.getOrElse(0))
   }
 
   test("one lineage: 10 rounds submit as many jobs as 1, and no stage " +

@@ -157,7 +157,6 @@ class PipelineSpec extends AnyFunSuite {
   }
 
   test("compact on re-delivered rows returns the removed count from footers, with no count or checkpoint job") {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
     val src = Files.createTempDirectory("graft_src_compact")
     val wh  = Files.createTempDirectory("graft_wh_compact")
     writeFixture(src, "b.json", fixtureLines.take(3))
@@ -167,29 +166,13 @@ class PipelineSpec extends AnyFunSuite {
     val cat = new TableCatalog(wh.toString)
     assert(cat.read(spark, "redo", "tracks").count() == 6)
 
-    val group = "compact-spec-" + System.nanoTime()
-    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group))
-          jobs.add(e.stageInfos.map(_.name).mkString("+"))
-    }
-    val sc = spark.sparkContext
-    sc.addSparkListener(listener)
-    val removed =
-      try {
-        sc.setJobGroup(group, "compact")
-        new graft.sink.WarehouseSink(cat).compact(spark, "redo", "tracks")
-      } finally {
-        sc.clearJobGroup()
-        Thread.sleep(1000)
-        sc.removeSparkListener(listener)
-      }
+    val (removed, jobs) =
+      JobRecorder.record(spark)(new graft.sink.WarehouseSink(cat).compact(spark, "redo", "tracks"))
     assert(removed == 3L)
     assert(cat.read(spark, "redo", "tracks").count() == 3)
     // the rewrite alone: its shuffle stage (adaptive execution runs it as
     // its own job) and the write; no count or checkpoint job before it
-    val seen = jobs.asScala.toSeq
+    val seen = JobRecorder.stageNames(jobs)
     info(s"${seen.size} jobs:\n${seen.mkString("\n")}")
     assert(seen.nonEmpty && seen.size <= 2, seen.mkString("\n"))
     assert(!seen.exists(j => j.contains("count at") || j.contains("localCheckpoint at")), seen.mkString("\n"))

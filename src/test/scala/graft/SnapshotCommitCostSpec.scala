@@ -1,8 +1,5 @@
 package graft
 
-import java.util.concurrent.atomic.AtomicInteger
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -23,29 +20,9 @@ class SnapshotCommitCostSpec extends AnyFunSuite {
   private def tmpRoot() =
     java.nio.file.Files.createTempDirectory("snapshot_cost").toString
 
-  /** Runs `body` under its own job group and returns its result with the
-    * number of Spark jobs the group started. */
-  private def jobsOf[T](body: => T): (T, Int) = {
-    val group = "snapshot-cost-" + System.nanoTime()
-    val jobs = new AtomicInteger()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group))
-          jobs.incrementAndGet()
-    }
-    val sc = spark.sparkContext
-    sc.addSparkListener(listener)
-    try {
-      sc.setJobGroup(group, "snapshot commit cost")
-      (body, { sc.clearJobGroup(); Thread.sleep(1000); jobs.get() })
-    } finally {
-      sc.clearJobGroup()
-      sc.removeSparkListener(listener)
-    }
-  }
-
   private def assertJobs(what: String, bound: Int)(body: => SnapshotSink.Snapshot): SnapshotSink.Snapshot = {
-    val (s, n) = jobsOf(body)
+    val (s, jobs) = JobRecorder.record(spark)(body)
+    val n = jobs.size
     info(s"$what: $n jobs (bound $bound)")
     assert(n <= bound, s"$what ran $n Spark jobs, more than $bound")
     s

@@ -86,9 +86,26 @@ class SnapshotSinkSpec extends AnyFunSuite {
 
   test("manifest file lists round-trip paths containing commas and quotes") {
     val json = """{"version":1,"rows":3,"files":["/a/p,1.parquet","/b \"q\" c.parquet","/plain.parquet"]}"""
-    assert(SnapshotSink.parseFilesArray(json) ==
+    assert(SnapshotSink.decodeManifest(json).files ==
       Seq("/a/p,1.parquet", "/b \"q\" c.parquet", "/plain.parquet"))
-    assert(SnapshotSink.parseFilesArray("""{"version":1,"rows":0,"files":[]}""").isEmpty)
+    assert(SnapshotSink.decodeManifest("""{"version":1,"rows":0,"files":[]}""").files.isEmpty)
+    // the codec writes the same text back: same keys, same order
+    assert(SnapshotSink.encodeManifest(SnapshotSink.decodeManifest(json)) == json)
+    // a manifest without its files list is refused, not read as empty
+    intercept[com.fasterxml.jackson.databind.JsonMappingException](
+      SnapshotSink.decodeManifest("""{"version":1,"rows":0}"""))
+  }
+
+  test("a root named with a comma, a quote and a backslash round-trips") {
+    val root = tmpRoot() + "/a,\"b\"\\c"
+    val s1 = SnapshotSink.commit(Seq((1L, "a")).toDF("k", "v"), root)
+    val s2 = SnapshotSink.append(Seq((2L, "b")).toDF("k", "v"), root)
+    assert(s2.version == 2 && s2.rows == 2 && s1.files.toSet.subsetOf(s2.files.toSet))
+    assert(SnapshotSink.snapshot(spark, root) == s2)
+    SnapshotSink.publish(spark, root, 1)
+    assert(SnapshotSink.publishedVersion(spark, root).contains(1))
+    assert(SnapshotSink.readPublished(spark, root).collect().map(_.getLong(0)).toSet == Set(1L))
+    assert(SnapshotSink.read(spark, root).collect().map(_.getLong(0)).toSet == Set(1L, 2L))
   }
 
   test("append: add-files commit reuses prior data files; vacuum keeps shared dirs") {
